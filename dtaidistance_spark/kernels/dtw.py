@@ -321,16 +321,12 @@ def lb_keogh_batch(X1: np.ndarray, X2: np.ndarray, window: Optional[int] = None,
 # ---------------------------------------------------------------------------
 
 
-def _batch_elems() -> int:
-    """Doubles of X per kernel batch (B = this // (r+c+1)).  Tunable via
-    DTW_BATCH_ELEMS; the default is the measured sweet spot for 4–16-way
-    concurrent workers on this class of host (r2 sweep: at L=482 the
-    1.2M setting ran 2.3× faster than 600k at both 4 and 16 procs —
-    per-call fixed costs dominate below B≈1000; above ~2.4M cache
-    pressure wins and throughput falls again)."""
-    import os
-
-    return int(os.environ.get("DTW_BATCH_ELEMS", "1200000"))
+# Doubles of X per kernel batch (B = BATCH_ELEMS // (r+c+1)): the
+# measured sweet spot for 4–16-way concurrent workers on this class of
+# host (r2 sweep: at L=482 the 1.2M setting ran 2.3× faster than 600k at
+# both 4 and 16 procs — per-call fixed costs dominate below B≈1000;
+# above ~2.4M cache pressure wins and throughput falls again).
+BATCH_ELEMS = 1_200_000
 
 
 _POOL: dict = {}
@@ -744,7 +740,7 @@ def dtw_distance_batch(X1: np.ndarray, X2: np.ndarray,
     r, c = X1.shape[1], X2.shape[1]
     # measured sweet spot on 32-way concurrency: aggregate throughput
     # peaks near 1.5M doubles of X per batch (B≈1024 at n=720)
-    bmax = max(64, _batch_elems() // (r + c + 1))
+    bmax = max(64, BATCH_ELEMS // (r + c + 1))
     if B <= bmax:
         d, _ = _dtw_batch_core(X1, X2, s)
         return d
@@ -799,7 +795,7 @@ def dtw_distance_batch_indexed(V: np.ndarray, pos_i: np.ndarray,
             return s.result(out)
     # numpy fallback: stacked chunks through the regular batch entry
     out = np.empty(B, dtype=np.float64)
-    bmax = max(64, _batch_elems() // (2 * L + 1))
+    bmax = max(64, BATCH_ELEMS // (2 * L + 1))
     for k in range(0, B, bmax):
         sl = slice(k, k + bmax)
         out[sl] = dtw_distance_batch(V[pos_i[sl]], V[pos_j[sl]], settings=s)

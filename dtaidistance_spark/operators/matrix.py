@@ -1,43 +1,45 @@
-"""Blocked all-pairs DTW distance matrix over a DataFrame of series.
+"""All-pairs DTW distance matrices over a DataFrame of series.
 
 The reference's central relational operator (distance_matrix,
 dtw.py:725-828) is a triangular theta self-join with an expensive
-per-pair kernel; its own distribution primitive is the rectangular
-``block`` (dtw.py:757-761, intended "to distribute the computations over
-multiple nodes", README.md:191-193).  Here the block becomes the Spark
-unit of work:
+per-pair kernel, distributed by its rectangular ``block`` (dtw.py:757-761)
+and an OMP guided schedule (dd_dtw_openmp.c:99-116).  Here every
+all-pairs variant (plain, block, weighted) runs through one planner:
 
-1. series get dense indices and a chunk id ``ci = i // chunk_size``;
-2. the *pair space* is pruned declaratively: only chunk pairs
-   ``ci <= cj`` (triangular symmetry) that intersect the requested block
-   survive — this is partition pruning over the pair space, done before
-   any data moves;
-3. each surviving chunk pair becomes one ``applyInPandas`` group whose
-   kernel computes its intra-block pairs with the batched anti-diagonal
-   DP (kernels/dtw.py), LB_Keogh-prefiltered when max_dist is set;
+1. series get dense indices (:func:`with_index`); the *pair space* — the
+   full upper triangle, a block triangle or a block rectangle — is a
+   :class:`PairSpace` over the sorted ids, with a closed-form unrank and
+   a cumulative kernel-cost function, so no O(n²) pair list exists;
+2. one gate picks the physical strategy.  Under the corpus-bytes and
+   pair caps (the default), the series are broadcast once and the space
+   is cut into guided, cost-weighted ``(lo, hi)`` ranges, one
+   ``mapInPandas`` task each.  Above them, chunk ids ``ci`` are assigned,
+   chunk pairs are pruned declaratively (triangular symmetry, block)
+   before any data moves, and each surviving chunk pair is one
+   ``applyInPandas`` group;
+3. both executors unrank their pairs in bounded sub-ranges and call one
+   kernel plug: the batched DP of kernels/dtw.py (LB_Keogh-prefiltered
+   when max_dist is set) or the per-pair weighted kernel;
 4. output is the long-format ``(i, j, d)`` DataFrame — the "condensed"
    matrix is just this table ordered row-major; a full numpy matrix is
    materialized only driver-side for small n.
 
-Scale properties: data duplication per chunk is O(n/chunk_size) (the
-unavoidable all-pairs fan-out), shuffle is keyed by (ci, cj) which is
-uniformly distributed by construction, and within a task pairs of equal
-length are batch-vectorized so Python overhead is amortized over
-thousands of pairs per numpy call.
+:func:`distance_matrix_cross` (query × corpus) keeps its own plan —
+query side broadcast, corpus streamed — and shares the kernel plug.
 """
 
 from __future__ import annotations
 
-import os
 from typing import Iterator, Optional, Tuple
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import Window as W
 
-from ..kernels.dtw import DtwSettings, dtw_distance_batch, lb_keogh_batch
+from ..kernels.dtw import (BATCH_ELEMS, DtwSettings, dtw_distance_batch,
+                           dtw_distance_batch_indexed, lb_keogh_batch)
 from ..resources import track_broadcast, track_persist
 
 PAIR_SCHEMA = "i long, j long, d double"
@@ -52,6 +54,17 @@ def _series_np(v) -> np.ndarray:
     return a.astype(np.float64, copy=False)
 
 
+def _cells(ids, cells) -> dict:
+    """{id: float64 array} from parallel id / series-cell columns, one
+    conversion per distinct id; null cells stay None."""
+    out = {}
+    for i, v in zip(ids, cells):
+        i = int(i)
+        if i not in out:
+            out[i] = None if v is None else _series_np(v)
+    return out
+
+
 def with_index(series_df: DataFrame, order_col: str = "series_id",
                index_col: str = "i", num_partitions: Optional[int] = None,
                persist: bool = True, ordered: bool = True) -> DataFrame:
@@ -60,7 +73,7 @@ def with_index(series_df: DataFrame, order_col: str = "series_id",
 
     Pass 1: range-repartition by ``order_col`` (globally ordered partition
     ranges), sort within partitions, persist, and collect the tiny
-    per-partition row counts.  Pass 2: a ``mapInPandas`` running counter
+    per-partition row counts.  Pass 2: a ``mapInArrow`` running counter
     plus the broadcast cumulative offsets yields the dense global index.
     Every stage is parallel; the only driver data is one count per
     partition.  (Replaces the round-1 global ``row_number()`` that
@@ -140,280 +153,135 @@ def _norm_block(block) -> Tuple[Optional[tuple], bool]:
             (int(block[1][0]), int(block[1][1]))), triu
 
 
+# --- kernel plug -------------------------------------------------------
+
+# Stacked (n, L) matrices of broadcast-held corpus dicts, keyed by dict
+# identity: every task in a worker gets the SAME broadcast dict, so the
+# stack is built once per worker instead of once per task.  Entries hold
+# a strong reference to their dict (which keeps id() stable) and are
+# evicted oldest-first once the stacks exceed the byte cap — the default
+# broadcast bytes gate, so one admitted corpus always fits and the next
+# job's corpus replaces it.
 _CORPUS_CACHE: dict = {}
+_CORPUS_CACHE_BYTES = 256 * 1024 * 1024
 
 
-def _corpus_matrix(values_by_idx: dict):
-    """(ids, V, pos) for an equal-length 1-D corpus dict, or None.
-
-    Cached per dict identity: the broadcast path hands every task in a
-    worker the SAME broadcast-held dict, so the (n, L) stack is built
-    once per worker instead of once per task.  The cache holds a strong
-    reference to the dict, which also keeps id() stable."""
-    key = id(values_by_idx)
-    hit = _CORPUS_CACHE.get(key)
+def _corpus_matrix(values_by_idx: dict, cache: bool = False):
+    """(ids, V) for an equal-length 1-D corpus dict, or None.  Only the
+    broadcast-held corpus passes ``cache=True``; per-group and per-batch
+    dicts are fresh objects that no later task can hit."""
+    hit = _CORPUS_CACHE.get(id(values_by_idx)) if cache else None
     if hit is not None and hit[0] is values_by_idx:
         return hit[1]
-    first = next(iter(values_by_idx.values()), None)
-    if first is None or np.asarray(first).ndim != 1:
-        res = None
-    else:
-        L = len(first)
-        arrs = list(values_by_idx.values())
-        if any(a.ndim != 1 or len(a) != L for a in arrs):
-            res = None
-        else:
-            ids = np.fromiter(values_by_idx.keys(), dtype=np.int64,
-                              count=len(values_by_idx))
-            order = np.argsort(ids)
-            ids = ids[order]
-            V = np.empty((len(ids), L), dtype=np.float64)
-            for row, k in enumerate(order):
-                V[row] = arrs[k]
-            res = (ids, V)
-    if len(_CORPUS_CACHE) > 4:
-        _CORPUS_CACHE.clear()
-    _CORPUS_CACHE[key] = (values_by_idx, res)
+    arrs = list(values_by_idx.values())
+    if not arrs or arrs[0].ndim != 1 or any(
+            a.ndim != 1 or len(a) != len(arrs[0]) for a in arrs):
+        return None
+    ids = np.fromiter(values_by_idx.keys(), dtype=np.int64, count=len(arrs))
+    order = np.argsort(ids)
+    V = np.empty((len(ids), len(arrs[0])), dtype=np.float64)
+    for row, k in enumerate(order):
+        V[row] = arrs[k]
+    res = (ids[order], V)
+    if cache:
+        held = sum(e[1][1].nbytes for e in _CORPUS_CACHE.values())
+        while _CORPUS_CACHE and held + V.nbytes > _CORPUS_CACHE_BYTES:
+            held -= _CORPUS_CACHE.pop(next(iter(_CORPUS_CACHE)))[1][1].nbytes
+        _CORPUS_CACHE[id(values_by_idx)] = (values_by_idx, res)
     return res
 
 
 def _compute_pairs(left: np.ndarray, right_idx: np.ndarray,
                    values_by_idx: dict, settings: DtwSettings,
-                   max_buf_elems: int = 8_000_000):
-    """Compute DTW for explicit (i, j) index pairs, batching equal-shape
-    pairs through the vectorized kernel.
+                   right_values: Optional[dict] = None, cache: bool = False):
+    """DTW for explicit index pairs ``(left[k], right_idx[k])`` →
+    ``(i, j, d)`` in input order.  ``left`` ids index ``values_by_idx``,
+    ``right_idx`` ids index ``right_values`` (default: the same dict).
 
-    Batch size is bounded by the DP working set — three (B, r+1) diagonal
-    buffers plus the two (B, len) input stacks — NOT by r·c (the full
-    cost matrix is never materialized); ~8M doubles ≈ 64 MB per buffer
-    keeps thousands of moderate-length pairs in one vectorized sweep.
-
-    Equal-length 1-D corpora without an LB prefilter skip the per-batch
-    stacking entirely: the indexed kernel entry reads series rows from
-    one shared (n, L) matrix (built once per worker), so no input bytes
-    are copied per pair.  Results are identical either way."""
-    use_lb_ = settings.max_dist is not None and settings.max_dist > 0
-    if not use_lb_ and len(left):
-        corpus = _corpus_matrix(values_by_idx)
-        if corpus is not None:
-            from ..kernels.dtw import dtw_distance_batch_indexed
-            ids, V = corpus
-            pi = np.searchsorted(ids, left)
-            pj = np.searchsorted(ids, right_idx)
-            d = dtw_distance_batch_indexed(V, pi, pj, settings=settings)
-            return (np.asarray(left, dtype=np.int64),
-                    np.asarray(right_idx, dtype=np.int64), d)
-    out_i, out_j, out_d = [], [], []
-    lens = {i: len(values_by_idx[i]) for i in values_by_idx}
+    Equal-length 1-D sources without an LB prefilter go through the
+    indexed kernel entry, which reads series rows out of one (n, L)
+    matrix — no per-pair input copies.  Everything else is grouped by
+    pair shape and stacked at the kernel's batch size, LB_Keogh-
+    prefiltered when max_dist is set (not under psi, where LB_Keogh is
+    no lower bound).  Results are identical either way."""
+    left = np.asarray(left, dtype=np.int64)
+    right_idx = np.asarray(right_idx, dtype=np.int64)
+    rvals = values_by_idx if right_values is None else right_values
+    use_lb = (settings.max_dist is not None and settings.max_dist > 0
+              and not any(settings.split_psi()))
+    if not use_lb and len(left):
+        lc = _corpus_matrix(values_by_idx, cache)
+        rc = lc if rvals is values_by_idx else _corpus_matrix(rvals)
+        if lc is not None and rc is not None \
+                and lc[1].shape[1] == rc[1].shape[1]:
+            pi = np.searchsorted(lc[0], left)
+            pj = np.searchsorted(rc[0], right_idx)
+            V = lc[1]
+            if rc is not lc:
+                V = np.concatenate([lc[1], rc[1]])
+                pj = pj + len(lc[0])
+            return left, right_idx, dtw_distance_batch_indexed(
+                V, pi, pj, settings=settings)
+    d = np.empty(len(left), dtype=np.float64)
     byshape: dict = {}
-    for i, j in zip(left, right_idx):
-        byshape.setdefault((lens[i], lens[j]), []).append((i, j))
-    use_lb = settings.max_dist is not None and settings.max_dist > 0
-    for (l1, l2), pairs in byshape.items():
-        pairs = np.asarray(pairs, dtype=np.int64)
+    for k, (i, j) in enumerate(zip(left, right_idx)):
+        byshape.setdefault((len(values_by_idx[i]), len(rvals[j])),
+                           []).append(k)
+    for (l1, l2), ks in byshape.items():
+        ks = np.asarray(ks, dtype=np.int64)
         # slice at the kernel's own cache-optimal batch size so each
         # np.stack copy is a few MB (reused heap), never tens of MB
-        from ..kernels.dtw import _batch_elems
-        bmax = max(64, _batch_elems() // (l1 + l2 + 1))
-        for s in range(0, len(pairs), bmax):
-            chunk = pairs[s:s + bmax]
-            X1 = np.stack([values_by_idx[i] for i in chunk[:, 0]])
-            X2 = np.stack([values_by_idx[j] for j in chunk[:, 1]])
+        bmax = max(64, BATCH_ELEMS // (l1 + l2 + 1))
+        for s in range(0, len(ks), bmax):
+            sel = ks[s:s + bmax]
+            X1 = np.stack([values_by_idx[i] for i in left[sel]])
+            X2 = np.stack([rvals[j] for j in right_idx[sel]])
+            todo = None
             if use_lb and l1 == l2 and X1.ndim == 2:
-                lb = lb_keogh_batch(X1, X2, window=settings.window,
-                                    inner_dist=settings.inner_dist)
-                todo = lb <= settings.max_dist
-            else:
-                todo = None
+                todo = lb_keogh_batch(X1, X2, window=settings.window,
+                                      inner_dist=settings.inner_dist) \
+                    <= settings.max_dist
             if todo is None or todo.all():
-                d = dtw_distance_batch(X1, X2, settings=settings)
+                d[sel] = dtw_distance_batch(X1, X2, settings=settings)
             else:
-                d = np.full(len(chunk), np.inf)
+                d[sel] = np.inf
                 if todo.any():
-                    d[todo] = dtw_distance_batch(X1[todo], X2[todo],
-                                                 settings=settings)
-            out_i.append(chunk[:, 0])
-            out_j.append(chunk[:, 1])
-            out_d.append(d)
-    if not out_i:
-        return (np.array([], np.int64),) * 2 + (np.array([], np.float64),)
-    return np.concatenate(out_i), np.concatenate(out_j), np.concatenate(out_d)
+                    d[sel[todo]] = dtw_distance_batch(
+                        X1[todo], X2[todo], settings=settings)
+    return left, right_idx, d
 
 
-def distance_matrix(series_df: DataFrame, settings: Optional[DtwSettings] = None,
-                    block=None, chunk_size: Optional[int] = None,
-                    index_col: str = "i", values_col: str = "values",
-                    **kwargs) -> DataFrame:
-    """All-pairs DTW distances → long DataFrame ``(i, j, d)``.
+def _dtw_plug(settings: DtwSettings):
+    """Kernel plug for plain DTW: ``plug(data, broadcast_held)`` returns
+    ``kernel(ii, jj) -> (i, j, d)`` over the task's series dicts."""
+    settings_json = settings.to_json()
 
-    ``block=((rb,re),(cb,ce)[,triu])`` follows reference semantics
-    (dtw.py:730, :757-761): with triu (default) only pairs ``i<j`` inside
-    the block are produced; with ``triu=False`` the full rectangle.
-
-    ``chunk_size=None`` sizes chunks so the pair space yields ≈8 groups
-    per core — enough units for the scheduler to balance the quadratic
-    per-group cost, while keeping series replication (one copy per
-    partner chunk) low.
-    """
-    s = settings if settings is not None else DtwSettings(**kwargs)
-    blk, triu = _norm_block(block)
-    settings_json = s.to_json()
-
-    src = series_df.select(F.col(index_col).cast("long").alias("i"),
-                           F.col(values_col).alias("values"))
-    if blk is not None:
-        (rb, re_), (cb, ce) = blk
-        src = src.where(
-            ((F.col("i") >= rb) & (F.col("i") < re_)) |
-            ((F.col("i") >= cb) & (F.col("i") < ce)))
-
-    # Persist BEFORE the single stats pass: the upstream plan (often the
-    # whole rollup → gap-fill → arrays pipeline) must execute exactly
-    # once — round 1 executed it twice (stats agg + broadcast collect),
-    # which showed up as a large serial component in the N-vs-4N curve.
-    src = track_persist(src.persist())
-    stats = src.agg(F.count("*").alias("n"),
-                    F.avg(F.size("values")).alias("alen"),
-                    F.max("i").alias("imax")).collect()[0]
-    n_total = int(stats["n"] or 0)
-    est_bytes = n_total * float(stats["alen"] or 0) * 8
-    conf = series_df.sparkSession.conf
-    max_bytes = float(conf.get("spark.dtaidistance.broadcastMatrixMaxBytes",
-                               str(256 * 1024 * 1024)))
-    # The pair cap only bounds per-task OUTPUT batches (ranges split as
-    # n_pairs/(4·par); rows stream out as Arrow batches), not memory held
-    # — the corpus-bytes gate above is the real memory guard.  r6: raised
-    # 20M → 4B after the driver's sf1.0 leg (15k series, 112.5M pairs,
-    # corpus 60 MB) fell off the broadcast path and paid the blocked
-    # shuffle's series replication + groupBy skew for no reason; pair
-    # ranges stream their output, so even a 4B-pair job holds only one
-    # Arrow batch per task at a time, and corpora too big to broadcast
-    # (the real constraint) still take the shuffle path via the bytes
-    # gate — e.g. a 3x-escalated corpus is ~1.01B pairs at 181 MB, still
-    # broadcastable, while ~5x trips the 256 MB bytes gate first.
-    max_pairs = int(conf.get("spark.dtaidistance.broadcastMatrixMaxPairs",
-                             str(4_000_000_000)))
-    # Physical strategy switch: when the whole series set fits in
-    # executor memory, broadcast it and shuffle ONLY pair-range tasks —
-    # the all-pairs fan-out otherwise replicates every series to
-    # ~n/chunk_size partner groups through the shuffle (the dominant
-    # non-kernel cost at bench scale).  Large corpora take the blocked
-    # shuffle path below, which scales to data that cannot be broadcast.
-    if est_bytes <= max_bytes and n_total * (n_total - 1) // 2 <= max_pairs:
-        return _distance_matrix_broadcast(src, s, blk, triu, settings_json)
-
-    par = series_df.sparkSession.sparkContext.defaultParallelism
-    # the broadcast-join fan-out below multiplies each row ~n/chunk_size
-    # times in the map stage — that write must come from enough tasks
-    if src.rdd.getNumPartitions() < max(2, par // 2):
-        src = src.repartition(par)
-    if chunk_size is None:
-        n = int(stats["imax"]) + 1 if stats["imax"] is not None else 1
-        n_chunks = max(1, int(np.ceil(np.sqrt(16.0 * par))))
-        chunk_size = max(8, -(-n // n_chunks))
-    tagged = _chunk_pair_tagged(src, chunk_size, triu, blk, ["values"], par)
-
-    rb_, re__, cb_, ce_ = (-1, -1, -1, -1)
-    if blk is not None:
-        (rb_, re__), (cb_, ce_) = blk
-
-    def compute(pdf: pd.DataFrame) -> pd.DataFrame:
+    def plug(data: dict, broadcast_held: bool):
         st = DtwSettings.from_json(settings_json)
-        rows_l = pdf[pdf["side"] == 0]
-        rows_r = pdf[pdf["side"] == 1]
-        vals = {}
-        for r in pdf.itertuples(index=False):
-            if r.i not in vals:
-                vals[r.i] = _series_np(r.values)
-        li = np.sort(rows_l["i"].unique())
-        rj = np.sort(rows_r["i"].unique())
-        ii, jj = np.meshgrid(li, rj, indexing="ij")
-        ii, jj = ii.ravel(), jj.ravel()
-        if triu:
-            keep = ii < jj
-            ii, jj = ii[keep], jj[keep]
-        if rb_ >= 0:
-            keep = ((ii >= rb_) & (ii < re__) & (jj >= cb_) & (jj < ce_))
-            ii, jj = ii[keep], jj[keep]
-        oi, oj, od = _compute_pairs(ii, jj, vals, st)
-        return pd.DataFrame({"i": oi, "j": oj, "d": od})
-
-    return tagged.groupBy("ci", "cj").applyInPandas(compute, schema=PAIR_SCHEMA)
+        vals = data["values"]
+        return lambda ii, jj: _compute_pairs(ii, jj, vals, st,
+                                             cache=broadcast_held)
+    return plug
 
 
-def _chunk_pair_tagged(src: DataFrame, chunk_size: int, triu: bool, blk,
-                       data_cols: list, par: int) -> DataFrame:
-    """Shared chunked-shuffle plan: assign chunk ids, prune the chunk-pair
-    space declaratively (triangular symmetry + block restriction — the
-    reference's own distribution primitive, dtw.py:757-761), replicate
-    each row to its surviving partner chunks, and hash-repartition on the
-    group key.  Callers groupBy("ci","cj") and apply their kernel.
+def _weighted_plug(window: Optional[int]):
+    """Kernel plug for weighted DTW: one kernels/extras call per pair,
+    the row series' weight profile reshaping the local difference."""
+    def plug(data: dict, broadcast_held: bool):
+        from ..kernels.extras import weighted_warping_paths
 
-    The explicit repartition matters: the UDF stage's cost is CPU
-    (quadratic pairs per group), not bytes — AQE's byte-based partition
-    coalescing must not shrink its parallelism (observed 3×32 cores idle
-    when it did).  groupBy reuses this partitioning, and AQE leaves
-    user-specified repartitioning alone.
+        v, w = data["values"], data["weights"]
 
-    Chunk ids (r5, VERDICT r4 item 4): ragged corpora get LENGTH-
-    balanced chunks so each chunk holds ~equal total series length and
-    the quadratic per-group cost stays ~equal under power-law lengths.
-    Scale shape: one parallel histogram aggregate over fine id-range
-    buckets (≤64k rows to the driver — never a single-partition window
-    or a full-id collect), driver prefix-sums it into bucket→chunk
-    boundaries, broadcast-joined back.  Chunk ids stay monotone in
-    ``i``, so the triangular chunk-pair pruning below stays exact.
-    Equal-length corpora keep the plain ``i // chunk_size`` projection
-    (no extra jobs); block restriction keeps fixed-size chunks (its
-    pruning arithmetic indexes chunks by ``id // chunk_size``)."""
-    len_col = F.size(data_cols[0])
-    probe = None
-    if os.environ.get("DTW_COST_GUIDED", "1") == "1" and blk is None:
-        # ONE combined aggregate decides raggedness AND feeds the
-        # histogram bounds — previously this was two extra full scans
-        probe = src.agg(
-            (F.min(len_col) != F.max(len_col)).alias("r"),
-            F.min("i"), F.max("i"), F.sum(len_col),
-            F.count("*")).collect()[0]
-    ragged = bool(probe and probe["r"])
-    if ragged:
-        _, imin, imax, tot, n_rows = probe
-        n_chunks = max(1, -(-int(n_rows) // chunk_size))
-        nb = min(max(n_chunks * 64, 256), 65536)
-        span = int(imax) - int(imin) + 1
-        bexpr = ((F.col("i") - F.lit(int(imin))) * nb / span).cast("long")
-        hist = sorted(src.groupBy(bexpr.alias("b"))
-                      .agg(F.sum(len_col).alias("s")).collect())
-        target = max(1.0, float(tot) / n_chunks)
-        cum = 0
-        mapping = []
-        for r in hist:
-            # chunk from the length mass BEFORE the bucket: monotone
-            # nondecreasing in b, hence in i
-            mapping.append((int(r["b"]),
-                            min(int(cum / target), n_chunks - 1)))
-            cum += int(r["s"])
-        mdf = src.sparkSession.createDataFrame(mapping, "b long, chunk long")
-        src = src.withColumn("b", bexpr) \
-                 .join(F.broadcast(mdf), "b").drop("b")
-    else:
-        src = src.withColumn("chunk", (F.col("i") / chunk_size).cast("long"))
-    chunks = src.select("chunk").distinct()
-    ca = chunks.select(F.col("chunk").alias("ci"))
-    cb_df = chunks.select(F.col("chunk").alias("cj"))
-    cp = ca.crossJoin(cb_df)
-    if triu:
-        cp = cp.where(F.col("ci") <= F.col("cj"))
-    if blk is not None:
-        (rb, re_), (cb, ce) = blk
-        cp = cp.where(
-            (F.col("ci") >= rb // chunk_size) & (F.col("ci") <= (re_ - 1) // chunk_size) &
-            (F.col("cj") >= cb // chunk_size) & (F.col("cj") <= (ce - 1) // chunk_size))
-    left = src.join(F.broadcast(cp), src["chunk"] == cp["ci"]) \
-              .select("ci", "cj", F.lit(0).alias("side"), "i", *data_cols)
-    right = src.join(F.broadcast(cp), src["chunk"] == cp["cj"]) \
-               .select("ci", "cj", F.lit(1).alias("side"), "i", *data_cols)
-    return left.unionByName(right).repartition(4 * par, "ci", "cj")
+        def kernel(ii, jj):
+            d = [weighted_warping_paths(v[a], v[b], weights=w[a],
+                                        window=window)[0]
+                 for a, b in zip(ii, jj)]
+            return ii, jj, np.asarray(d, dtype=np.float64)
+        return kernel
+    return plug
+
+
+# --- pair space and schedule -------------------------------------------
 
 
 def _triu_unrank(p: np.ndarray, n: int) -> Tuple[np.ndarray, np.ndarray]:
@@ -432,63 +300,99 @@ def _triu_unrank(p: np.ndarray, n: int) -> Tuple[np.ndarray, np.ndarray]:
     return i, j
 
 
-def _guided_ranges(n_pairs: int, par: int) -> list:
-    """Guided-schedule pair ranges (the reference's OMP ``guided``
-    distribution for its matrix loop, dtw.py:681 ``schedule(guided)``,
-    re-expressed for Spark's task scheduler): range k covers
-    ``remaining // (2·par)`` pairs with a floor, so early tasks are big
-    (low fixed cost) and the final wave is fine-grained — on a host
-    where identical tasks spread 5× (neighbor contention), the tail
-    straggler holds at most a small chunk instead of 1/(4·par) of the
-    whole job.  Profiled 32-way on the 1.124M-pair bench corpus: equal
-    128-range schedule idles ~30% of core-seconds in the decay tail
-    (concurrency 32 → 2 over the last third of the wall)."""
-    ranges = []
-    lo = 0
-    floor = max(1, -(-n_pairs // (par * 24)))
-    while lo < n_pairs:
-        # r6: first-wave divisor 2·par -> 4·par.  A range task's fixed
-        # cost is one Arrow iterator + broadcast access (~ms), so the
-        # "big first tasks" motivation barely applies, while at the
-        # sf1.0 scale a 2·par first wave made single tasks ~40 s — any
-        # one slowed worker (GC burst, cpufreq dip) stretched the whole
-        # job by most of a wave.  Halving the wave size halves the
-        # worst-case straggler exposure; outputs are identical (same
-        # pairs, different task boundaries).
-        # ceil like the cost-weighted twin's binary search, so the two
-        # schedules coincide exactly on equal-length corpora
-        size = max(floor, -(-(n_pairs - lo) // (4 * par)))
-        hi = min(n_pairs, lo + size)
-        ranges.append((lo, hi))
-        lo = hi
-    return ranges
+# Pairs per kernel call inside one range: bounds a task's index, output
+# and frame arrays (~64 B/pair, so ~128 MB) whatever range size the
+# schedule hands it — under the 4B pair gate a first-wave range alone
+# can hold n_pairs/(4·par) pairs.
+SUBRANGE_PAIRS = 2_000_000
+
+
+class PairSpace:
+    """A row-major linear pair space over sorted dense series ids: the
+    full upper triangle over ``rows`` (``cols is None``), or the
+    rectangle ``rows × cols`` of a block, optionally filtered to i<j
+    (the reference's block semantics, dtw.py:757-761).  Position ``p``
+    unranks in closed form, so tasks carry only ``(lo, hi)``."""
+
+    def __init__(self, rows: np.ndarray, cols: Optional[np.ndarray] = None,
+                 triu: bool = True):
+        self.rows, self.cols, self.triu = rows, cols, triu
+        n = len(rows)
+        self.n_pairs = n * (n - 1) // 2 if cols is None else n * len(cols)
+
+    @classmethod
+    def plan(cls, ids: np.ndarray, blk, triu: bool) -> "PairSpace":
+        if blk is None:
+            return cls(ids)
+        (rb, re_), (cb, ce) = blk
+        return cls(ids[(ids >= rb) & (ids < re_)],
+                   ids[(ids >= cb) & (ids < ce)], triu)
+
+    def unrank(self, lo: int, hi: int) -> Tuple[np.ndarray, np.ndarray]:
+        p = np.arange(lo, hi, dtype=np.int64)
+        if self.cols is None:
+            r, c = _triu_unrank(p, len(self.rows))
+            return self.rows[r], self.rows[c]
+        ii = self.rows[p // len(self.cols)]
+        jj = self.cols[p % len(self.cols)]
+        if self.triu:
+            keep = ii < jj
+            ii, jj = ii[keep], jj[keep]
+        return ii, jj
+
+    def frames(self, lo: int, hi: int, kernel) -> Iterator[pd.DataFrame]:
+        """Run ``kernel`` over [lo, hi) in sub-ranges of at most
+        :data:`SUBRANGE_PAIRS`, one ``(i, j, d)`` frame each."""
+        for a in range(lo, hi, SUBRANGE_PAIRS):
+            oi, oj, od = kernel(*self.unrank(a, min(hi, a + SUBRANGE_PAIRS)))
+            yield pd.DataFrame({"i": oi, "j": oj, "d": od})
+
+    def ranges(self, ids: np.ndarray, lens: np.ndarray, par: int) -> list:
+        """Guided ``(lo, hi)`` schedule weighted by the kernel's cost
+        len_i·len_j (``lens`` aligned with ``ids``).  Equal lengths use
+        unit weights, so cost is the pair count itself."""
+        w = (np.asarray(lens, dtype=np.float64) if lens.min() != lens.max()
+             else np.ones(len(lens)))
+        wr = w[np.searchsorted(ids, self.rows)]
+        if self.cols is None:
+            cost_upto, total = _triu_cost_fn(wr)
+        else:
+            cost_upto, total = _rect_cost_fn(
+                wr, w[np.searchsorted(ids, self.cols)])
+        return _guided_ranges_cost(cost_upto, self.n_pairs, total, par)
 
 
 def _guided_ranges_cost(cost_upto, n_pairs: int, total: float,
                         par: int) -> list:
-    """Cost-weighted guided pair ranges (VERDICT r4 item 4): the same
-    guided decay as :func:`_guided_ranges`, but measured in estimated
-    kernel cost rather than pair count.  A DTW pair costs
-    O(len_i · len_j); for the equal-length bench corpus count == cost
-    and the two schedules coincide, but for a power-law ragged corpus
-    (real conversation lengths) an early count-based range can hold
-    10-100x the work of a late one, defeating the guided tail — the
-    reference's OMP loop shares the concern (its guided schedule also
-    decays in *pair count*, dd_dtw_openmp.c:111-116; we can do better
-    because the driver knows every length upfront).
+    """Guided-schedule pair ranges measured in estimated kernel cost —
+    the reference's OMP ``guided`` distribution of its matrix loop
+    (dtw.py:681 ``schedule(guided)``, dd_dtw_openmp.c:111-116),
+    re-expressed for Spark's task scheduler.  Range k covers the larger
+    of ``remaining / (4·par)`` and a ``total / (24·par)`` floor, so the
+    first wave is big and the final wave fine-grained: on a host where
+    identical tasks spread 5× (neighbor contention) the tail straggler
+    holds a small chunk, not 1/(4·par) of the job.  Profiled 32-way on
+    the 1.124M-pair bench corpus, an equal 128-range schedule idled ~30%
+    of core-seconds in the decay tail.  (r6: the first-wave divisor went
+    2·par → 4·par — a range task's fixed cost is ~ms, and at the sf1.0
+    scale 2·par made single tasks ~40 s, so one slowed worker stretched
+    the job by most of a wave.)
 
-    ``cost_upto(p)`` must return the closed-form cumulative cost of the
-    first ``p`` pairs of the linear pair space; boundaries are found by
-    binary search on it, so nothing O(n²) is materialized.  Outputs are
-    a partition of [0, n_pairs) — the kernel computes the same pairs in
-    the same per-task order, so results are bit-identical to any other
-    schedule."""
+    Cost, not count: a DTW pair costs O(len_i · len_j), and for a
+    power-law ragged corpus an early count-based range can hold 10-100x
+    the work of a late one, defeating the guided tail.  The reference's
+    guided schedule decays in pair count; the driver here knows every
+    length upfront.  With unit weights the schedule is the count one.
+
+    ``cost_upto(p)`` is the closed-form cumulative cost of the first
+    ``p`` pairs; boundaries are found by binary search on it, so nothing
+    O(n²) is materialized.  Outputs are a partition of [0, n_pairs), and
+    the kernel computes the same pairs whatever the boundaries."""
     ranges = []
     lo = 0
     cost_lo = 0.0
     floor_c = max(total / n_pairs, total / (par * 24))
     while lo < n_pairs:
-        # same 4·par first wave as _guided_ranges (r6) — see note there
         want = cost_lo + max(floor_c, (total - cost_lo) / (4 * par))
         if want >= total:
             hi = n_pairs
@@ -554,117 +458,257 @@ def _rect_cost_fn(row_lens: np.ndarray, col_lens: np.ndarray):
     return cost_upto, total
 
 
-def _collect_series_dict(src: DataFrame) -> dict:
-    """Collect ``(i, values)`` to a {id: float64 array} dict.
+# --- planner and the two executors -------------------------------------
 
-    Flat ``array<double>`` corpora go through ``DataFrame.toArrow()``:
-    the list column arrives as ONE contiguous values buffer + offsets,
-    and each series becomes a numpy slice view of it — no per-row
-    Python objects (r6: ``toPandas`` rebuilt every cell as an object
-    array; at 15k x 504 that conversion dwarfed the driver collect
-    itself).  Nested (n-D) series keep the pandas path."""
-    vtype = src.schema["values"].dataType
-    flat = (vtype.typeName() == "array"
-            and vtype.elementType.typeName() == "double")
-    if flat:
-        tb = src.select("i", "values").toArrow()
-        ids = tb.column("i").to_numpy()
-        va = tb.column("values").combine_chunks()
-        if va.null_count == 0 and va.values.null_count == 0:
+
+def _fits_broadcast(spark, n: int, doubles_per_series: float) -> bool:
+    """The physical-strategy gate: broadcast the corpus when its bytes
+    and pair count fit under the two ``spark.dtaidistance`` caps.
+
+    The pair cap only bounds how much one job may ask of the range
+    executor, not memory held: ranges run in bounded sub-ranges and
+    stream their output, so the corpus-bytes gate is the real memory
+    guard.  r6: raised 20M → 4B after the driver's sf1.0 leg (15k
+    series, 112.5M pairs, corpus 60 MB) fell off the broadcast path and
+    paid the blocked shuffle's series replication + groupBy skew for no
+    reason; a 3x-escalated corpus is ~1.01B pairs at 181 MB, still
+    broadcastable, while ~5x trips the 256 MB bytes gate first."""
+    conf = spark.conf
+    max_bytes = float(conf.get("spark.dtaidistance.broadcastMatrixMaxBytes",
+                               str(256 * 1024 * 1024)))
+    max_pairs = int(conf.get("spark.dtaidistance.broadcastMatrixMaxPairs",
+                             str(4_000_000_000)))
+    return (n * doubles_per_series * 8 <= max_bytes
+            and n * (n - 1) // 2 <= max_pairs)
+
+
+def _all_pairs(series_df: DataFrame, index_col: str, cols: dict, blk,
+               triu: bool, chunk_size: Optional[int],
+               doubles_per_point: int, plug) -> DataFrame:
+    """Plan one all-pairs job: project ``i`` plus the payload columns
+    (``cols`` maps payload name → input column, ``values`` first),
+    restrict to the block, and pick the strategy.  When the corpus fits
+    under the gate it is broadcast and only pair ranges are shuffled;
+    otherwise the blocked chunk-pair shuffle runs, which scales to data
+    that cannot be broadcast."""
+    src = series_df.select(F.col(index_col).cast("long").alias("i"),
+                           *[F.col(c).alias(a) for a, c in cols.items()])
+    if blk is not None:
+        (rb, re_), (cb, ce) = blk
+        src = src.where(
+            ((F.col("i") >= rb) & (F.col("i") < re_)) |
+            ((F.col("i") >= cb) & (F.col("i") < ce)))
+    # Persist BEFORE the single stats pass: the upstream plan (often the
+    # whole rollup → gap-fill → arrays pipeline) must execute exactly
+    # once — round 1 executed it twice (stats agg + broadcast collect),
+    # which showed up as a large serial component in the N-vs-4N curve.
+    src = track_persist(src.persist())
+    stats = src.agg(F.count("*").alias("n"),
+                    F.avg(F.size("values")).alias("alen"),
+                    F.max("i").alias("imax")).collect()[0]
+    n = int(stats["n"] or 0)
+    if _fits_broadcast(src.sparkSession, n,
+                       float(stats["alen"] or 0) * doubles_per_point):
+        return _broadcast_pairs(src, list(cols), blk, triu, plug)
+    return _shuffle_pairs(src, list(cols), blk, triu, chunk_size,
+                          stats["imax"], plug)
+
+
+def _collect_columns(src: DataFrame, cols: list) -> dict:
+    """Collect ``i`` plus ``cols`` in one ``toArrow()`` into
+    ``{col: {id: float64 array}}``.
+
+    Flat ``array<double>`` columns become numpy slice views of the one
+    contiguous Arrow values buffer — no per-row Python objects (r6:
+    ``toPandas`` rebuilt every cell as an object array; at 15k x 504
+    that conversion dwarfed the driver collect itself).  Nested (n-D
+    series, weight profiles) cells go through :func:`_series_np`; null
+    cells stay None."""
+    tb = src.select("i", *cols).toArrow()
+    ids = tb.column("i").to_numpy()
+    out = {}
+    for c in cols:
+        va = tb.column(c).combine_chunks()
+        if (pa.types.is_list(va.type)
+                and pa.types.is_float64(va.type.value_type)
+                and va.null_count == 0 and va.values.null_count == 0):
             off = va.offsets.to_numpy()
             buf = va.values.to_numpy()
-            return {int(ids[k]): buf[off[k]:off[k + 1]]
-                    for k in range(len(ids))}
-    pdf = src.toPandas()
-    return {int(i): _series_np(v)
-            for i, v in zip(pdf["i"], pdf["values"])}
-
-
-def _distance_matrix_broadcast(src: DataFrame, s: DtwSettings, blk, triu,
-                               settings_json: str) -> DataFrame:
-    """Broadcast-corpus physical strategy: series dict broadcast once,
-    work distributed as (lo, hi) pair-range tasks over the triangular
-    pair space.  Pair (i, j) coordinates are derived from the linear
-    range by closed-form unranking INSIDE each task — the driver never
-    materializes or broadcasts the O(n²) pair lists, only the O(n)
-    series ids."""
-    spark = src.sparkSession
-    vals = _collect_series_dict(src)
-    ids = np.array(sorted(vals), dtype=np.int64)
-    bc = track_broadcast(spark.sparkContext.broadcast(vals))
-    par = spark.sparkContext.defaultParallelism
-    n_tasks = max(par * 4, 8)
-
-    n_ids = len(ids)
-    if blk is None:
-        n_pairs = n_ids * (n_ids - 1) // 2
-        rows_b = cols_b = None
-    else:
-        (rb, re_), (cb, ce) = blk
-        rows = ids[(ids >= rb) & (ids < re_)]
-        cols = ids[(ids >= cb) & (ids < ce)]
-        n_pairs = len(rows) * len(cols)
-        rows_b = track_broadcast(spark.sparkContext.broadcast(rows))
-        cols_b = track_broadcast(spark.sparkContext.broadcast(cols))
-    if n_pairs == 0:
-        return spark.createDataFrame([], PAIR_SCHEMA)
-    if os.environ.get("DTW_GUIDED", "1") == "1":
-        # one range per partition, IN ORDER (big ranges first): Spark
-        # launches tasks by partition index as slots free, which is
-        # exactly OMP guided scheduling.  parallelize(n items, n slices)
-        # keeps the order; .repartition() would round-robin it away.
-        # Ragged corpora (unequal series lengths) get COST-weighted
-        # boundaries — len_i·len_j, the DTW kernel's actual work — so a
-        # power-law length distribution cannot hide 100x the work in an
-        # early "equal-count" range (r5; DTW_COST_GUIDED=0 reverts to
-        # count-weighted for A/B).  Equal lengths: identical schedule.
-        lens = np.array([vals[int(i)].shape[0] for i in ids],
-                        dtype=np.int64)
-        ragged = lens.min() != lens.max() \
-            and os.environ.get("DTW_COST_GUIDED", "1") == "1"
-        if ragged and blk is None:
-            cost_upto, total = _triu_cost_fn(lens)
-            ranges = _guided_ranges_cost(cost_upto, n_pairs, total, par)
-        elif ragged:
-            pos = {int(v): k for k, v in enumerate(ids)}
-            cost_upto, total = _rect_cost_fn(
-                lens[[pos[int(r)] for r in rows]],
-                lens[[pos[int(c)] for c in cols]])
-            ranges = _guided_ranges_cost(cost_upto, n_pairs, total, par)
+            out[c] = {int(ids[k]): buf[off[k]:off[k + 1]]
+                      for k in range(len(ids))}
         else:
-            ranges = _guided_ranges(n_pairs, par)
-        rdf = spark.createDataFrame(
-            spark.sparkContext.parallelize(ranges, len(ranges)),
-            "lo long, hi long")
-    else:
-        bounds = np.linspace(0, n_pairs, min(n_tasks, n_pairs) + 1,
-                             dtype=np.int64)
-        ranges = [(int(bounds[k]), int(bounds[k + 1]))
-                  for k in range(len(bounds) - 1) if bounds[k] < bounds[k + 1]]
-        rdf = spark.createDataFrame(ranges, "lo long, hi long") \
-            .repartition(len(ranges))
-    ids_b = track_broadcast(spark.sparkContext.broadcast(ids))
+            out[c] = _cells(ids, va.to_numpy(zero_copy_only=False))
+    return out
+
+
+def _broadcast_pairs(src: DataFrame, cols: list, blk, triu: bool,
+                     plug) -> DataFrame:
+    """Broadcast-corpus strategy: the series dicts are broadcast once
+    and work is distributed as guided ``(lo, hi)`` pair-range tasks.
+    Pair coordinates are unranked INSIDE each task — the driver never
+    materializes the O(n²) pair list, only the O(n) ids."""
+    spark = src.sparkSession
+    sc = spark.sparkContext
+    data = _collect_columns(src, cols)
+    ids = np.array(sorted(data["values"]), dtype=np.int64)
+    space = PairSpace.plan(ids, blk, triu)
+    if space.n_pairs == 0:
+        return spark.createDataFrame([], PAIR_SCHEMA)
+    lens = np.array([len(data["values"][int(i)]) for i in ids],
+                    dtype=np.int64)
+    ranges = space.ranges(ids, lens, sc.defaultParallelism)
+    # one range per partition, IN ORDER (big ranges first): Spark
+    # launches tasks by partition index as slots free, which is exactly
+    # OMP guided scheduling.  parallelize(n items, n slices) keeps the
+    # order; .repartition() would round-robin it away.
+    rdf = spark.createDataFrame(sc.parallelize(ranges, len(ranges)),
+                                "lo long, hi long")
+    data_b = track_broadcast(sc.broadcast(data))
+    space_b = track_broadcast(sc.broadcast(space))
 
     def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        st = DtwSettings.from_json(settings_json)
-        v = bc.value
-        for pdf_ in batches:
-            for row in pdf_.itertuples(index=False):
-                p = np.arange(row.lo, row.hi, dtype=np.int64)
-                if blk is None:
-                    ri, rj = _triu_unrank(p, n_ids)
-                    ii, jj = ids_b.value[ri], ids_b.value[rj]
-                else:
-                    rr, cc = rows_b.value, cols_b.value
-                    ii = rr[p // len(cc)]
-                    jj = cc[p % len(cc)]
-                    if triu:
-                        keep = ii < jj
-                        ii, jj = ii[keep], jj[keep]
-                oi, oj, od = _compute_pairs(ii, jj, v, st)
-                yield pd.DataFrame({"i": oi, "j": oj, "d": od})
+        kernel = plug(data_b.value, True)
+        for pdf in batches:
+            for lo, hi in zip(pdf["lo"], pdf["hi"]):
+                yield from space_b.value.frames(int(lo), int(hi), kernel)
 
     return rdf.mapInPandas(compute, schema=PAIR_SCHEMA)
+
+
+def _shuffle_pairs(src: DataFrame, cols: list, blk, triu: bool,
+                   chunk_size: Optional[int], imax, plug) -> DataFrame:
+    """Blocked chunk-pair strategy for corpora above the broadcast gate:
+    each surviving chunk pair is one ``applyInPandas`` group whose pair
+    set is the rectangle of its two chunks' ids (restricted to the
+    block, i<j under triu), run through the same pair-space executor."""
+    par = src.sparkSession.sparkContext.defaultParallelism
+    # the broadcast-join fan-out below multiplies each row ~n/chunk_size
+    # times in the map stage — that write must come from enough tasks
+    if src.rdd.getNumPartitions() < max(2, par // 2):
+        src = src.repartition(par)
+    if chunk_size is None:
+        # ≈8 groups per core: enough units for the scheduler to balance
+        # the quadratic per-group cost, while keeping series replication
+        # (one copy per partner chunk) low
+        n = int(imax) + 1 if imax is not None else 1
+        n_chunks = max(1, int(np.ceil(np.sqrt(16.0 * par))))
+        chunk_size = max(8, -(-n // n_chunks))
+    tagged = _chunk_pair_tagged(src, chunk_size, triu, blk, cols, par)
+
+    def compute(pdf: pd.DataFrame) -> pd.DataFrame:
+        ids, side = pdf["i"].to_numpy(), pdf["side"].to_numpy()
+        data = {c: _cells(ids, pdf[c]) for c in cols}
+        rows, cols_ = np.unique(ids[side == 0]), np.unique(ids[side == 1])
+        if blk is not None:
+            (rb, re_), (cb, ce) = blk
+            rows = rows[(rows >= rb) & (rows < re_)]
+            cols_ = cols_[(cols_ >= cb) & (cols_ < ce)]
+        space = PairSpace(rows, cols_, triu)
+        frames = list(space.frames(0, space.n_pairs, plug(data, False)))
+        if not frames:
+            return pd.DataFrame({"i": np.array([], np.int64),
+                                 "j": np.array([], np.int64),
+                                 "d": np.array([], np.float64)})
+        return pd.concat(frames, ignore_index=True)
+
+    return tagged.groupBy("ci", "cj").applyInPandas(compute, schema=PAIR_SCHEMA)
+
+
+def _chunk_pair_tagged(src: DataFrame, chunk_size: int, triu: bool, blk,
+                       data_cols: list, par: int) -> DataFrame:
+    """Chunked-shuffle plan: assign chunk ids, prune the chunk-pair
+    space declaratively (triangular symmetry + block restriction — the
+    reference's own distribution primitive, dtw.py:757-761), replicate
+    each row to its surviving partner chunks, and hash-repartition on the
+    group key.  Callers groupBy("ci","cj") and apply their kernel.
+
+    The explicit repartition matters: the UDF stage's cost is CPU
+    (quadratic pairs per group), not bytes — AQE's byte-based partition
+    coalescing must not shrink its parallelism (observed 3×32 cores idle
+    when it did).  groupBy reuses this partitioning, and AQE leaves
+    user-specified repartitioning alone.
+
+    Chunk ids (r5, VERDICT r4 item 4): ragged corpora get LENGTH-
+    balanced chunks so each chunk holds ~equal total series length and
+    the quadratic per-group cost stays ~equal under power-law lengths.
+    Scale shape: one parallel histogram aggregate over fine id-range
+    buckets (≤64k rows to the driver — never a single-partition window
+    or a full-id collect), driver prefix-sums it into bucket→chunk
+    boundaries, broadcast-joined back.  Chunk ids stay monotone in
+    ``i``, so the triangular chunk-pair pruning below stays exact.
+    Equal-length corpora keep the plain ``i // chunk_size`` projection
+    (no extra jobs); block restriction keeps fixed-size chunks (its
+    pruning arithmetic indexes chunks by ``id // chunk_size``)."""
+    len_col = F.size(data_cols[0])
+    probe = None
+    if blk is None:
+        # ONE combined aggregate decides raggedness AND feeds the
+        # histogram bounds — previously this was two extra full scans
+        probe = src.agg(
+            (F.min(len_col) != F.max(len_col)).alias("r"),
+            F.min("i"), F.max("i"), F.sum(len_col),
+            F.count("*")).collect()[0]
+    ragged = bool(probe and probe["r"])
+    if ragged:
+        _, imin, imax, tot, n_rows = probe
+        n_chunks = max(1, -(-int(n_rows) // chunk_size))
+        nb = min(max(n_chunks * 64, 256), 65536)
+        span = int(imax) - int(imin) + 1
+        bexpr = ((F.col("i") - F.lit(int(imin))) * nb / span).cast("long")
+        hist = sorted(src.groupBy(bexpr.alias("b"))
+                      .agg(F.sum(len_col).alias("s")).collect())
+        target = max(1.0, float(tot) / n_chunks)
+        cum = 0
+        mapping = []
+        for r in hist:
+            # chunk from the length mass BEFORE the bucket: monotone
+            # nondecreasing in b, hence in i
+            mapping.append((int(r["b"]),
+                            min(int(cum / target), n_chunks - 1)))
+            cum += int(r["s"])
+        mdf = src.sparkSession.createDataFrame(mapping, "b long, chunk long")
+        src = src.withColumn("b", bexpr) \
+                 .join(F.broadcast(mdf), "b").drop("b")
+    else:
+        src = src.withColumn("chunk", (F.col("i") / chunk_size).cast("long"))
+    chunks = src.select("chunk").distinct()
+    ca = chunks.select(F.col("chunk").alias("ci"))
+    cb_df = chunks.select(F.col("chunk").alias("cj"))
+    cp = ca.crossJoin(cb_df)
+    if triu:
+        cp = cp.where(F.col("ci") <= F.col("cj"))
+    if blk is not None:
+        (rb, re_), (cb, ce) = blk
+        cp = cp.where(
+            (F.col("ci") >= rb // chunk_size) & (F.col("ci") <= (re_ - 1) // chunk_size) &
+            (F.col("cj") >= cb // chunk_size) & (F.col("cj") <= (ce - 1) // chunk_size))
+    left = src.join(F.broadcast(cp), src["chunk"] == cp["ci"]) \
+              .select("ci", "cj", F.lit(0).alias("side"), "i", *data_cols)
+    right = src.join(F.broadcast(cp), src["chunk"] == cp["cj"]) \
+               .select("ci", "cj", F.lit(1).alias("side"), "i", *data_cols)
+    return left.unionByName(right).repartition(4 * par, "ci", "cj")
+
+
+# --- entry points ------------------------------------------------------
+
+
+def distance_matrix(series_df: DataFrame, settings: Optional[DtwSettings] = None,
+                    block=None, chunk_size: Optional[int] = None,
+                    index_col: str = "i", values_col: str = "values",
+                    **kwargs) -> DataFrame:
+    """All-pairs DTW distances → long DataFrame ``(i, j, d)``.
+
+    ``block=((rb,re),(cb,ce)[,triu])`` follows reference semantics
+    (dtw.py:730, :757-761): with triu (default) only pairs ``i<j`` inside
+    the block are produced; with ``triu=False`` the full rectangle.
+
+    ``chunk_size`` applies to the chunk-pair shuffle strategy only;
+    ``None`` sizes chunks so the pair space yields ≈8 groups per core.
+    """
+    s = settings if settings is not None else DtwSettings(**kwargs)
+    blk, triu = _norm_block(block)
+    return _all_pairs(series_df, index_col, {"values": values_col}, blk,
+                      triu, chunk_size, 1, _dtw_plug(s))
 
 
 def distance_matrix_weighted(series_df: DataFrame, window: Optional[int] = None,
@@ -675,109 +719,12 @@ def distance_matrix_weighted(series_df: DataFrame, window: Optional[int] = None,
     difference of the row series.  The per-pair kernel is
     kernels/extras.weighted_warping_paths.  Like the reference (triu
     only, matrix[i,j] uses weights[i]), the output is asymmetric in
-    principle and only i<j pairs are produced.
-
-    Physical strategy mirrors :func:`distance_matrix`: when the corpus
-    (values + 8-knot weight profiles ≈ 9 doubles/point) fits under the
-    broadcast gate, it is collected once and work distributes as pair-
-    range tasks; otherwise the blocked chunk-pair shuffle path runs —
-    no ungated driver collect at any size."""
-    from ..kernels.extras import weighted_warping_paths
-
-    spark = series_df.sparkSession
-    src = series_df.select(F.col(index_col).cast("long").alias("i"),
-                           F.col(values_col).alias("values"),
-                           F.col(weights_col).alias("weights"))
-    src = track_persist(src.persist())
-    stats = src.agg(F.count("*").alias("n"),
-                    F.avg(F.size("values")).alias("alen"),
-                    F.max("i").alias("imax")).collect()[0]
-    n_total = int(stats["n"] or 0)
-    # values (1 double/point) + weight profile (8 knots/point)
-    est_bytes = n_total * float(stats["alen"] or 0) * 8 * 9
-    conf = spark.conf
-    max_bytes = float(conf.get("spark.dtaidistance.broadcastMatrixMaxBytes",
-                               str(256 * 1024 * 1024)))
-    max_pairs = int(conf.get("spark.dtaidistance.broadcastMatrixMaxPairs",
-                             str(20_000_000)))
-    if est_bytes > max_bytes or n_total * (n_total - 1) // 2 > max_pairs:
-        return _distance_matrix_weighted_shuffle(src, window, stats)
-    pdf = src.toPandas()
-    vals = {int(r.i): np.asarray(r[1], dtype=np.float64)
-            for r in pdf.itertuples(index=False)}
-    wts = {int(r.i): (None if r[2] is None else np.asarray(
-        [list(x) for x in r[2]], dtype=np.float64))
-        for r in pdf.itertuples(index=False)}
-    ids = np.array(sorted(vals), dtype=np.int64)
-    n = len(ids)
-    bc_v = track_broadcast(spark.sparkContext.broadcast(vals))
-    bc_w = track_broadcast(spark.sparkContext.broadcast(wts))
-    par = spark.sparkContext.defaultParallelism
-    n_pairs = n * (n - 1) // 2
-    if n_pairs == 0:
-        return spark.createDataFrame([], PAIR_SCHEMA)
-    bounds = np.linspace(0, n_pairs, min(max(par * 4, 8), n_pairs) + 1,
-                         dtype=np.int64)
-    ranges = [(int(bounds[k]), int(bounds[k + 1]))
-              for k in range(len(bounds) - 1) if bounds[k] < bounds[k + 1]]
-    rdf = spark.createDataFrame(ranges, "lo long, hi long") \
-        .repartition(len(ranges))
-    win = window
-
-    def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        v, w = bc_v.value, bc_w.value
-        for pdf_ in batches:
-            for row in pdf_.itertuples(index=False):
-                p = np.arange(row.lo, row.hi, dtype=np.int64)
-                ri, rj = _triu_unrank(p, n)
-                out = [weighted_warping_paths(v[ids[a]], v[ids[b]],
-                                              weights=w[ids[a]],
-                                              window=win)[0]
-                       for a, b in zip(ri, rj)]
-                yield pd.DataFrame({"i": ids[ri], "j": ids[rj], "d": out})
-
-    return rdf.mapInPandas(compute, schema=PAIR_SCHEMA)
-
-
-def _distance_matrix_weighted_shuffle(src: DataFrame, window: Optional[int],
-                                      stats) -> DataFrame:
-    """Blocked chunk-pair fallback for the weighted matrix: same plan
-    shape as the unweighted shuffle path (values AND weight profiles ride
-    the shuffle), so corpora above the broadcast gate never hit the
-    driver."""
-    from ..kernels.extras import weighted_warping_paths
-
-    spark = src.sparkSession
-    par = spark.sparkContext.defaultParallelism
-    if src.rdd.getNumPartitions() < max(2, par // 2):
-        src = src.repartition(par)
-    n = int(stats["imax"]) + 1 if stats["imax"] is not None else 1
-    n_chunks = max(1, int(np.ceil(np.sqrt(16.0 * par))))
-    chunk_size = max(8, -(-n // n_chunks))
-    tagged = _chunk_pair_tagged(src, chunk_size, True, None,
-                                ["values", "weights"], par)
-    win = window
-
-    def compute(pdf: pd.DataFrame) -> pd.DataFrame:
-        vals, wts = {}, {}
-        for r in pdf.itertuples(index=False):
-            if r.i not in vals:
-                vals[r.i] = np.asarray(r.values, dtype=np.float64)
-                wts[r.i] = (None if r.weights is None else np.asarray(
-                    [list(x) for x in r.weights], dtype=np.float64))
-        li = np.sort(pdf.loc[pdf["side"] == 0, "i"].unique())
-        rj = np.sort(pdf.loc[pdf["side"] == 1, "i"].unique())
-        ii, jj = np.meshgrid(li, rj, indexing="ij")
-        ii, jj = ii.ravel(), jj.ravel()
-        keep = ii < jj
-        ii, jj = ii[keep], jj[keep]
-        out = [weighted_warping_paths(vals[a], vals[b], weights=wts[a],
-                                      window=win)[0]
-               for a, b in zip(ii, jj)]
-        return pd.DataFrame({"i": ii, "j": jj,
-                             "d": np.asarray(out, dtype=np.float64)})
-
-    return tagged.groupBy("ci", "cj").applyInPandas(compute, schema=PAIR_SCHEMA)
+    principle and only i<j pairs are produced.  Same planner and
+    executors as :func:`distance_matrix`; the gate counts values plus
+    weight profiles, 9 doubles per point."""
+    return _all_pairs(series_df, index_col,
+                      {"values": values_col, "weights": weights_col},
+                      None, True, None, 9, _weighted_plug(window))
 
 
 def distance_matrix_cross(query_df: DataFrame, corpus_df: DataFrame,
@@ -786,7 +733,9 @@ def distance_matrix_cross(query_df: DataFrame, corpus_df: DataFrame,
                           **kwargs) -> DataFrame:
     """Rectangular cross-set distances (reference ``_matrices`` variant,
     dd_dtw.c:5227-5323): every query × every corpus series.  The query
-    set is broadcast (it is small by assumption); the corpus streams."""
+    set is broadcast (it is small by assumption); the corpus streams
+    through the DTW kernel plug, queries as the left value source and
+    corpus series as the right."""
     s = settings if settings is not None else DtwSettings(**kwargs)
     settings_json = s.to_json()
     q = query_df.select(F.col(index_col).cast("long").alias("qi"),
@@ -798,24 +747,11 @@ def distance_matrix_cross(query_df: DataFrame, corpus_df: DataFrame,
     def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         st = DtwSettings.from_json(settings_json)
         for pdf in batches:
-            vals = {}
-            out_q, out_c, out_d = [], [], []
-            byshape = {}
-            arrs_c = [_series_np(v) for v in pdf["values"]]
-            arrs_q = [_series_np(v) for v in pdf["qvalues"]]
-            for k in range(len(pdf)):
-                byshape.setdefault((len(arrs_q[k]), len(arrs_c[k])), []).append(k)
-            for (l1, l2), idxs in byshape.items():
-                bmax = max(16, 4_000_000 // max(l1 * l2, 1))
-                for sft in range(0, len(idxs), bmax):
-                    sel = idxs[sft:sft + bmax]
-                    X1 = np.stack([arrs_q[k] for k in sel])
-                    X2 = np.stack([arrs_c[k] for k in sel])
-                    d = dtw_distance_batch(X1, X2, settings=st)
-                    out_q.extend(pdf["qi"].iloc[sel])
-                    out_c.extend(pdf["i"].iloc[sel])
-                    out_d.extend(d)
-            yield pd.DataFrame({"qi": out_q, "i": out_c, "d": out_d})
+            qi, ci = pdf["qi"].to_numpy(), pdf["i"].to_numpy()
+            oq, oc, od = _compute_pairs(
+                qi, ci, _cells(qi, pdf["qvalues"]), st,
+                right_values=_cells(ci, pdf["values"]))
+            yield pd.DataFrame({"qi": oq, "i": oc, "d": od})
 
     return joined.mapInPandas(compute, schema="qi long, i long, d double")
 

@@ -4,12 +4,15 @@ condensed ordering, golden fixtures from reference tests/test_dtw.py)."""
 import math
 
 import numpy as np
+import pandas as pd
 import pytest
 
-from dtaidistance_spark.kernels.dtw import DtwSettings
+from dtaidistance_spark.kernels.dtw import DtwSettings, dtw_distance
+from dtaidistance_spark.kernels.extras import weighted_warping_paths
+from dtaidistance_spark.operators import matrix as M
 from dtaidistance_spark.operators.matrix import (
-    condensed_index, distance_matrix, distance_matrix_cross, to_condensed,
-    to_matrix, with_index,
+    PairSpace, condensed_index, distance_matrix, distance_matrix_cross,
+    distance_matrix_weighted, to_condensed, to_matrix, with_index,
 )
 
 S6 = [
@@ -25,6 +28,15 @@ S6 = [
 def _series_df(spark, series):
     rows = [(i, [float(x) for x in s]) for i, s in enumerate(series)]
     return spark.createDataFrame(rows, "i long, values array<double>")
+
+
+def _shuffled(spark, run):
+    """Run ``run()`` with the broadcast gate closed (chunk-pair shuffle)."""
+    spark.conf.set("spark.dtaidistance.broadcastMatrixMaxBytes", "0")
+    try:
+        return run()
+    finally:
+        spark.conf.unset("spark.dtaidistance.broadcastMatrixMaxBytes")
 
 
 class TestCondensedIndex:
@@ -170,34 +182,37 @@ class TestCostAwareScheduling:
             quantum = max(floor_c, (total - c_lo) / (2 * par))
             assert c_hi - c_lo <= quantum + slack, (lo, hi)
 
-    def test_equal_lengths_reduce_to_count_schedule(self):
-        from dtaidistance_spark.operators.matrix import (
-            _guided_ranges, _guided_ranges_cost, _triu_cost_fn)
+    @pytest.mark.parametrize("n,par", [(2, 1), (3, 4), (150, 16),
+                                       (500, 4), (1001, 32), (15000, 4)])
+    def test_equal_length_schedule_closed_form(self, n, par):
+        # equal lengths: the cost schedule is the count-guided one, range
+        # size max(ceil(P/(24 par)), ceil((P-lo)/(4 par))) over P pairs
+        ids = np.arange(n, dtype=np.int64)
+        got = PairSpace(ids).ranges(ids, np.full(n, 37), par)
+        P = n * (n - 1) // 2
+        want, lo = [], 0
+        while lo < P:
+            hi = min(P, lo + max(-(-P // (24 * par)),
+                                 -(-(P - lo) // (4 * par))))
+            want.append((lo, hi))
+            lo = hi
+        assert got == want
+        if (n, par) == (500, 4):
+            assert len(got) == 44
 
-        lens = np.full(150, 37, dtype=np.int64)
-        n_pairs = 150 * 149 // 2
-        cost_upto, total = _triu_cost_fn(lens)
-        got = _guided_ranges_cost(cost_upto, n_pairs, total, 16)
-        want = _guided_ranges(n_pairs, 16)
-        # same decay profile (the cost search is ceil-of-quantum where
-        # the count schedule floors, so boundaries drift by ≤1 pair per
-        # range and the tail may pack into ±2 ranges)
-        assert abs(len(got) - len(want)) <= 2
-        for k, ((gl, gh), (wl, wh)) in enumerate(zip(got, want)):
-            assert abs((gh - gl) - (wh - wl)) <= k + 1, k
-
-    def test_cost_vs_count_schedules_bit_identical(self, spark, rng,
-                                                   monkeypatch):
+    def test_broadcast_vs_shuffle_bit_identical(self, spark, rng):
+        # same ragged corpus through both strategies: the cost-weighted
+        # range schedule and the length-balanced chunk groups only move
+        # work, so every d is bitwise equal
         series = [list(rng.normal(size=int(n)))
                   for n in rng.integers(6, 60, 20)]
         df = _series_df(spark, series)
-        monkeypatch.setenv("DTW_COST_GUIDED", "1")
         a = distance_matrix(df).toPandas().sort_values(["i", "j"]) \
             .reset_index(drop=True)
-        monkeypatch.setenv("DTW_COST_GUIDED", "0")
-        b = distance_matrix(df).toPandas().sort_values(["i", "j"]) \
-            .reset_index(drop=True)
-        assert a.equals(b)  # bit-identical, schedule only moves work
+        b = _shuffled(spark, lambda: distance_matrix(df).toPandas()) \
+            .sort_values(["i", "j"]).reset_index(drop=True)
+        assert len(a) == 20 * 19 // 2
+        assert a.equals(b)
 
     def test_ragged_shuffle_path_matches_reference(self, spark, ref_dtw,
                                                    rng):
@@ -241,6 +256,156 @@ class TestCross:
         for row in out.itertuples(index=False):
             expected = ref_dtw.distance(queries[row.qi], corpus[row.i])
             assert row.d == pytest.approx(expected, rel=1e-14)
+
+
+# block → membership of pair (i, j) in the expected pair set
+SPACES = {
+    "full": (None, lambda i, j: i < j),
+    "block_triu": (((1, 9), (4, 13)),
+                   lambda i, j: 1 <= i < 9 and 4 <= j < 13 and i < j),
+    "block_rect": (((1, 9), (4, 13), False),
+                   lambda i, j: 1 <= i < 9 and 4 <= j < 13),
+}
+
+
+def _corpus(rng, n, ragged, ndim=False):
+    lens = rng.integers(6, 30, n) if ragged else np.full(n, 16)
+    return [rng.normal(size=(int(L), 3) if ndim else int(L)) for L in lens]
+
+
+def _corpus_df(spark, series):
+    elem = "array<double>" if series[0].ndim == 1 else "array<array<double>>"
+    return spark.createDataFrame([(i, s.tolist()) for i, s in
+                                  enumerate(series)], f"i long, values {elem}")
+
+
+class TestExecutor:
+    """Reference-free checks of the pair-space executors: each strategy
+    returns exactly the expected pair set, and every ``d`` equals the
+    per-pair kernel on the same two series."""
+
+    @pytest.mark.parametrize("ndim", [False, True], ids=["1d", "nd"])
+    @pytest.mark.parametrize("ragged", [False, True], ids=["equal", "ragged"])
+    @pytest.mark.parametrize("space", list(SPACES))
+    @pytest.mark.parametrize("shuffle", [False, True],
+                             ids=["broadcast", "shuffle"])
+    def test_pairs_and_distances(self, spark, shuffle, space, ragged, ndim):
+        series = _corpus(np.random.default_rng(7), 14, ragged, ndim)
+        block, member = SPACES[space]
+        st = DtwSettings(window=5)
+        df = _corpus_df(spark, series)
+        run = lambda: distance_matrix(df, settings=st, block=block,
+                                      chunk_size=4).toPandas()
+        pdf = _shuffled(spark, run) if shuffle else run()
+        got = list(zip(pdf["i"], pdf["j"]))
+        assert len(got) == len(set(got))
+        assert set(got) == {(i, j) for i in range(14) for j in range(14)
+                            if member(i, j)}
+        for r in pdf.itertuples(index=False):
+            exp = dtw_distance(series[r.i], series[r.j], settings=st)
+            if ndim:
+                assert r.d == pytest.approx(exp, rel=1e-12)
+            else:
+                assert r.d == exp
+
+    @pytest.mark.parametrize("st", [DtwSettings(window=4, max_dist=3.0),
+                                    DtwSettings(window=4, psi=2,
+                                                max_dist=3.0)],
+                             ids=["lb", "psi"])
+    def test_max_dist_matches_kernel(self, spark, st):
+        # every third series starts with a spike: LB_Keogh prunes the
+        # pairs where it leads (the kernel puts them at inf too), but
+        # psi=2 skips the spike, so there LB_Keogh is no lower bound
+        rng = np.random.default_rng(11)
+        base = np.sin(np.linspace(0, 3, 16))
+        series = [base + 0.05 * rng.normal(size=16) for _ in range(12)]
+        for s in series[::3]:
+            s[:2] += 10
+        pdf = distance_matrix(_corpus_df(spark, series),
+                              settings=st).toPandas()
+        assert len(pdf) == 12 * 11 // 2
+        for r in pdf.itertuples(index=False):
+            assert r.d == dtw_distance(series[r.i], series[r.j], settings=st)
+        assert np.isinf(pdf["d"]).any() == (st.psi is None)
+
+    @pytest.mark.parametrize("shuffle", [False, True],
+                             ids=["broadcast", "shuffle"])
+    def test_weighted(self, spark, shuffle):
+        rng = np.random.default_rng(5)
+        n, L = 7, 20
+        S = rng.normal(0, 1, (n, L))
+        W = np.sort(np.abs(rng.normal(0.5, 0.2, (n, L, 8))), axis=2)
+        df = spark.createDataFrame(
+            [(i, S[i].tolist(), W[i].tolist()) for i in range(n)],
+            "i long, values array<double>, weights array<array<double>>")
+        run = lambda: distance_matrix_weighted(df, window=6).toPandas()
+        pdf = _shuffled(spark, run) if shuffle else run()
+        got = list(zip(pdf["i"], pdf["j"]))
+        assert sorted(got) == [(i, j) for i in range(n)
+                               for j in range(i + 1, n)]
+        for r in pdf.itertuples(index=False):
+            exp, _ = weighted_warping_paths(S[r.i], S[r.j], weights=W[r.i],
+                                            window=6)
+            assert r.d == pytest.approx(exp, rel=1e-12)
+
+    @pytest.mark.parametrize("ragged", [False, True], ids=["equal", "ragged"])
+    def test_cross(self, spark, ragged):
+        rng = np.random.default_rng(9)
+        corpus = _corpus(rng, 11, ragged)
+        queries = _corpus(rng, 3, ragged)
+        st = DtwSettings(window=6)
+        pdf = distance_matrix_cross(_corpus_df(spark, queries),
+                                    _corpus_df(spark, corpus),
+                                    settings=st).toPandas()
+        got = list(zip(pdf["qi"], pdf["i"]))
+        assert sorted(got) == [(q, i) for q in range(3) for i in range(11)]
+        for r in pdf.itertuples(index=False):
+            assert r.d == dtw_distance(queries[r.qi], corpus[r.i],
+                                       settings=st)
+
+
+class TestSubRanges:
+    @pytest.mark.parametrize("space", [PairSpace(np.arange(120)),
+                                       PairSpace(np.arange(10, 90),
+                                                 np.arange(40, 130))])
+    def test_range_above_cap_yields_bounded_frames(self, monkeypatch,
+                                                   space):
+        monkeypatch.setattr(M, "SUBRANGE_PAIRS", 1000)
+        rng = np.random.default_rng(5)
+        vals = {i: rng.normal(size=20) for i in range(130)}
+        st = DtwSettings(window=4)
+        kernel = lambda ii, jj: M._compute_pairs(ii, jj, vals, st)
+        frames = list(space.frames(100, 6900, kernel))
+        assert len(frames) == 7
+        assert all(len(f) <= 1000 for f in frames)
+        oi, oj, od = kernel(*space.unrank(100, 6900))
+        single = pd.DataFrame({"i": oi, "j": oj, "d": od})
+        assert pd.concat(frames, ignore_index=True).equals(single)
+
+
+class TestCorpusCache:
+    def _pairs(self, vals, cache):
+        ii, jj = np.triu_indices(len(vals), k=1)
+        return M._compute_pairs(ii, jj, vals, DtwSettings(window=3),
+                                cache=cache)
+
+    def test_non_broadcast_dict_not_cached(self, monkeypatch):
+        monkeypatch.setattr(M, "_CORPUS_CACHE", {})
+        rng = np.random.default_rng(1)
+        self._pairs({i: rng.normal(size=16) for i in range(9)}, False)
+        assert M._CORPUS_CACHE == {}
+
+    def test_broadcast_dict_cached_and_evicted_by_bytes(self, monkeypatch):
+        monkeypatch.setattr(M, "_CORPUS_CACHE", {})
+        monkeypatch.setattr(M, "_CORPUS_CACHE_BYTES", 9 * 16 * 8 * 3 // 2)
+        rng = np.random.default_rng(1)
+        a = {i: rng.normal(size=16) for i in range(9)}
+        b = {i: rng.normal(size=16) for i in range(9)}
+        da = self._pairs(a, True)[2]
+        assert [v[0] for v in M._CORPUS_CACHE.values()] == [a]
+        assert np.array_equal(self._pairs(a, True)[2], da)
+        self._pairs(b, True)
+        assert [v[0] for v in M._CORPUS_CACHE.values()] == [b]
 
 
 class TestWithIndex:
