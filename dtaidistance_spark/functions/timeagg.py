@@ -54,6 +54,30 @@ def _epoch_us(col):
     return F.unix_micros(F.col(col).cast("timestamp"))
 
 
+def packed_order_key(ts_col: str, order_col: str):
+    """A DECIMAL(38,0) key order-isomorphic to ``(ts, order_col)``:
+    zero-padded decimal digits of ``unix_micros(ts)`` (20) ++
+    ``order_col`` (18), built by string concat so no decimal arithmetic
+    can lose precision.  A min_by/max_by buffer of this type is
+    fixed-width mutable, so the aggregation runs as a map-side-partial
+    HashAggregate; a ``struct(ts, order)`` key orders identically but
+    silently demotes it to SortAggregate (full sort per bucket; r6).
+
+    Exact only for ts >= epoch and 0 <= order_col < 10^18: a pre-epoch
+    ts would cast to a NULL key and an order of 19+ digits would be
+    truncated by ``lpad``.  Both raise at runtime instead."""
+    us = _epoch_us(ts_col)
+    order = F.col(order_col)
+    key = F.concat(F.lpad(us.cast("string"), 20, "0"),
+                   F.lpad(order.cast("string"), 18, "0"),
+                   ).cast("decimal(38,0)")
+    bad = (us < 0) | (order < 0) | (order >= 10 ** 18)
+    return F.when(bad, F.raise_error(F.format_string(
+        "packed_order_key: %s=%s or %s=%s outside ts >= epoch and "
+        "0 <= order < 10^18", F.lit(ts_col), F.col(ts_col).cast("string"),
+        F.lit(order_col), order.cast("string")))).otherwise(key)
+
+
 def counter_delta(
     points: DataFrame,
     series_col: str = "series_id",
@@ -339,26 +363,18 @@ def candlestick(
     combine associatively), so this is the cheapest aggregate in the
     family and scales at scan speed.
 
-    ``pack_key=True`` (single integral ``order_cols`` only) packs the
-    ``(ts, order_col)`` struct into one DECIMAL(38,0) — zero-padded
-    decimal digits of ``unix_micros(ts)`` (20) ++ the order col (18).
-    Identical ordering => identical open/close, but the min_by/max_by
-    buffer becomes fixed-width mutable, so the aggregation actually
-    RUNS as the map-side-partial HashAggregate described above — a
-    struct-typed buffer silently demotes it to SortAggregate (full
-    sort per bucket; r6).  Requires ts >= epoch and
-    0 <= order_col < 10^18; the struct key remains the default for
-    anything else.
+    ``pack_key=True`` (single integral ``order_cols`` only) replaces
+    the struct key with `packed_order_key`: identical ordering =>
+    identical open/close, but the aggregation actually RUNS as the
+    map-side-partial HashAggregate described above.  Its domain
+    (ts >= epoch, 0 <= order_col < 10^18) is checked at runtime; the
+    struct key remains the default for anything else.
     """
     trunc = _TRUNC[every]
     if pack_key:
         if len(order_cols) != 1:
             raise ValueError("pack_key requires exactly one order col")
-        key = F.concat(
-            F.lpad(F.unix_micros(F.col(ts_col).cast("timestamp"))
-                   .cast("string"), 20, "0"),
-            F.lpad(F.col(order_cols[0]).cast("string"), 18, "0"),
-        ).cast("decimal(38,0)")
+        key = packed_order_key(ts_col, order_cols[0])
     else:
         key = F.struct(F.col(ts_col), *[F.col(c) for c in order_cols])
     return (

@@ -88,13 +88,13 @@ static double dtw_one(const double *restrict x, const double *restrict y,
         if (t <= c && lo == 1) cur[0] = (t <= psi2b) ? 0.0 : INF;
         if (t <= r && t == hi + 1) cur[t] = (t <= psi1b) ? 0.0 : INF;
         if (lo <= hi) {
-            /* cost index: x[i-1], y[t-i-1] == yr[c-t+i] (contiguous) */
-            const double *restrict xs = x - 1;       /* xs[i] = x[i-1] */
-            const double *restrict ys = yr + (c - t); /* ys[i] = yr[c-t+i] */
+            /* cost index: x[i-1], y[t-i-1] == yr[c-t+i] (contiguous),
+             * always from the base pointers: x - 1 or yr + (c - t)
+             * would point outside their arrays (undefined behaviour) */
             if (pen == 0.0 && max_step == INF) {
                 if (squared) {
                     for (i = lo; i <= hi; i++) {
-                        double d = xs[i] - ys[i];
+                        double d = x[i - 1] - yr[c - t + i];
                         double cost = d * d;
                         double m = min2d(D1[i - 1], D1[i]);
                         m = min2d(m, D2[i - 1]);
@@ -102,7 +102,7 @@ static double dtw_one(const double *restrict x, const double *restrict y,
                     }
                 } else {
                     for (i = lo; i <= hi; i++) {
-                        double d = xs[i] - ys[i];
+                        double d = x[i - 1] - yr[c - t + i];
                         double cost = fabs(d);
                         double m = min2d(D1[i - 1], D1[i]);
                         m = min2d(m, D2[i - 1]);
@@ -111,7 +111,7 @@ static double dtw_one(const double *restrict x, const double *restrict y,
                 }
             } else {
                 for (i = lo; i <= hi; i++) {
-                    double d = xs[i] - ys[i];
+                    double d = x[i - 1] - yr[c - t + i];
                     double cost = squared ? d * d : fabs(d);
                     if (cost > max_step) cost = INF;
                     double m = min2d(D1[i - 1] + pen, D1[i] + pen);

@@ -3,9 +3,14 @@
 The shared object is compiled on demand (once per host, guarded by a
 file lock so concurrent Spark python workers don't race) and cached
 next to the source with a build-tag name, so a source edit triggers a
-rebuild and a stale .so is never loaded.  Any failure — no compiler,
-read-only dir, dlopen error — degrades silently to ``lib() is None``
-and callers fall back to the numpy path, which is bit-identical.
+rebuild and a stale .so is never loaded.  When the package directory
+is not ours to write (read-only, or writable by others), the cache is
+a per-user 0700 directory under the temp root instead.  A library is
+loaded only if it and its directory are owned by this user and
+writable by no one else; a planted or tampered file is refused.  Any
+failure — no compiler, refused file, dlopen error — degrades silently
+to ``lib() is None`` and callers fall back to the numpy path, which is
+bit-identical.
 
 Set ``DTW_C_KERNEL=0`` to disable the C path entirely (A/B harness).
 """
@@ -29,29 +34,42 @@ _CFLAGS = ["-O3", "-march=native", "-ffp-contract=off",
            "-mprefer-vector-width=512"]
 
 
+def _private(path: str) -> bool:
+    """True iff ``path`` is owned by this user and not group- or
+    world-writable: only then can no one else swap what we dlopen."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return False
+    return st.st_uid == os.getuid() and not st.st_mode & 0o022
+
+
 def _build_dir() -> str:
-    d = os.environ.get("DTW_C_BUILD_DIR")
-    if d:
-        return d
     pkg = os.path.dirname(_SRC)
-    if os.access(pkg, os.W_OK):
+    if os.access(pkg, os.W_OK) and _private(pkg):
         return pkg
-    # read-only checkout (e.g. a driver running the tree from a
-    # protected location): build under tmp instead of silently losing
-    # the C path — the hash tag keeps concurrent users collision-free
-    return tempfile.gettempdir()
+    # read-only or shared checkout: a per-user 0700 directory, never the
+    # world-writable temp root itself.  If someone else already owns this
+    # path, `lib` refuses it and the numpy path runs.
+    d = os.path.join(tempfile.gettempdir(),
+                     f"dtaidistance_spark-{os.getuid()}")
+    os.makedirs(d, mode=0o700, exist_ok=True)
+    return d
 
 
-def _so_path(tag: str) -> str:
-    return os.path.join(_build_dir(), f"_dtw_kernel_{tag}.so")
+def _tag() -> str:
+    """Build tag = source + flags, so a flag change rebuilds too."""
+    with open(_SRC, "rb") as f:
+        return hashlib.sha256(
+            f.read() + " ".join(_CFLAGS).encode()).hexdigest()[:16]
 
 
-def _compile(tag: str) -> str | None:
+def _compile(build_dir: str, tag: str) -> str | None:
     """Compile the kernel to its tagged .so path; returns the path or
     None.  A file lock serializes concurrent builders; the compile
     writes to a temp name and renames atomically, so a reader never
     dlopens a half-written file."""
-    out = _so_path(tag)
+    out = os.path.join(build_dir, f"_dtw_kernel_{tag}.so")
     if os.path.exists(out):
         return out
     lock_path = out + ".lock"
@@ -62,7 +80,7 @@ def _compile(tag: str) -> str | None:
             fcntl.flock(lock, fcntl.LOCK_EX)
             if os.path.exists(out):
                 return out
-            fd, tmp = tempfile.mkstemp(suffix=".so", dir=_build_dir())
+            fd, tmp = tempfile.mkstemp(suffix=".so", dir=build_dir)
             os.close(fd)
             # -ffp-contract=off: forbid FMA contraction of d*d + m —
             # contraction changes the last ULP and breaks bit-equality
@@ -98,12 +116,11 @@ def lib():
     if os.environ.get("DTW_C_KERNEL", "1") != "1":
         return None
     try:
-        with open(_SRC, "rb") as f:
-            # tag = source + flags, so a flag change rebuilds too
-            tag = hashlib.sha256(
-                f.read() + " ".join(_CFLAGS).encode()).hexdigest()[:16]
-        path = _compile(tag)
-        if path is None:
+        build_dir = _build_dir()
+        if not _private(build_dir):
+            return None
+        path = _compile(build_dir, _tag())
+        if path is None or not _private(path):
             return None
         cdll = ctypes.CDLL(path)
         fn = cdll.dtw_batch

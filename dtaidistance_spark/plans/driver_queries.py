@@ -26,6 +26,7 @@ from ..operators import text as TX
 from ..operators import dedup as DD
 from ..operators import ann as ANN
 from ..functions import preprocessing as PP
+from ..functions.timeagg import packed_order_key
 
 # ---------------------------------------------------------------------------
 # shared building blocks
@@ -102,23 +103,16 @@ def event_points_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     full pass over the raw events instead of two.  Queries that emit
     ``seq`` itself (latency, sessionize) keep the windowed variant.
 
-    r6: the surrogate is a DECIMAL(38,0) — zero-padded decimal digits
-    of unix_micros(ts) (20) ++ event_id (18), built by string concat so
-    no decimal arithmetic can lose precision.  The r5 ``struct(ts,
-    event_id)`` key ordered identically but a struct-typed min_by/max_by
-    buffer is not UnsafeRow-mutable, which silently demoted every tier
-    aggregation to SortAggregate (full sort of the raw scan per tier —
-    the dominant rollup cost at sf1.0); a decimal buffer is fixed-width
-    mutable, so the same plan runs as a map-side-partial HashAggregate.
-    Exact for ts >= epoch and 0 <= event_id < 10^18 — both pinned by
-    the testdata generator contract (TESTDATA.md: seed-42 synthetic,
-    2024+ timestamps, dense int64 event ids)."""
+    r6: the surrogate is `timeagg.packed_order_key(ts, event_id)`, a
+    DECIMAL(38,0) whose min_by/max_by buffer keeps every tier
+    aggregation a map-side-partial HashAggregate (the r5 ``struct(ts,
+    event_id)`` key demoted them to SortAggregate — a full sort of the
+    raw scan per tier, the dominant rollup cost at sf1.0).  Its domain
+    (ts >= epoch, 0 <= event_id < 10^18; TESTDATA.md: seed-42
+    synthetic, 2024+ timestamps, dense int64 event ids) is checked at
+    runtime."""
     ev = _events(spark, sf_dir)
-    seq = F.concat(
-        F.lpad(F.unix_micros(F.col("ts").cast("timestamp")).cast("string"),
-               20, "0"),
-        F.lpad(F.col("event_id").cast("string"), 18, "0"),
-    ).cast("decimal(38,0)")
+    seq = packed_order_key("ts", "event_id")
     return ev.select(
         F.concat(F.lit("user"), F.col("user_id").cast("string")).alias("series_id"),
         seq.alias("seq"),
@@ -177,28 +171,22 @@ def q_tier_sink_roundtrip(spark, sf_dir):
     """The full storage stack in one hash-checked chain: 1m tier →
     snapshot COMMIT (sinks/snapshots.py copy-on-write + manifest) →
     manifest-diff cascade refresh to 1h (sinks/refresh.py) → manifest
-    as-of read → tiered parquet sink (sinks/tiers.py: (tier, p_day)
-    dynamic partition overwrite) → partition-pruned read.  The oracle
-    is the plain 1h rollup SQL, so the hash check proves both physical
-    layouts AND the incremental-refresh path are lossless end-to-end
-    (the compress_roundtrip pattern, applied to the table layer)."""
+    read of the 1h tier.  The oracle is the plain 1h rollup SQL, so the
+    hash check proves the snapshot layout AND the incremental-refresh
+    path are lossless end-to-end (the compress_roundtrip pattern,
+    applied to the table layer)."""
     import hashlib
     import shutil
     from ..sinks import refresh as RF
     from ..sinks import snapshots as SN
-    from ..sinks import tiers as SK
 
     agg1m = R.rollup_points(event_points_rollup(spark, sf_dir), "1m")
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    base_s = "/tmp/dts_tier_snap_" + tag
-    base_d = "/tmp/dts_tier_sink_" + tag
-    shutil.rmtree(base_s, ignore_errors=True)
-    shutil.rmtree(base_d, ignore_errors=True)
-    SN.commit_tier(agg1m, base_s, "1m")
-    RF.refresh_cascade(spark, base_s, "1m", "1h")
-    agg1h = SN.read_tier(spark, base_s, "1h")
-    SK.write_tier(agg1h, base_d, "1h")
-    return _rollup_named(SK.read_tier(spark, base_d, "1h"))
+    base = "/tmp/dts_tier_snap_" + tag
+    shutil.rmtree(base, ignore_errors=True)
+    SN.commit_tier(agg1m, base, "1m")
+    RF.refresh_cascade(spark, base, "1m", "1h")
+    return _rollup_named(SN.read_tier(spark, base, "1h"))
 
 
 def q_gap_fill_1h(spark, sf_dir):

@@ -1,15 +1,14 @@
 """Snapshot commits + time travel for the tiered sink — Iceberg's
-metadata mechanism re-expressed on plain parquet.
+metadata mechanism re-expressed on plain parquet.  This is the only
+storage layout of the rollup tiers (1m → 1h → 1d across retention).
 
-Why it exists: `tiers.write_tier` refreshes a day with *dynamic
-partition overwrite*, which physically deletes the day's old files at
-commit time.  That is correct for a single writer and latest-only
-readers, but it cannot give the two guarantees the north rule's Iceberg
-deployment supplies: a reader concurrent with a refresh must see a
-consistent table version (snapshot isolation), and yesterday's rolled-up
-points must stay queryable after today's re-aggregation (time travel —
-the audit path for "rolled-up points match the reference bit-for-bit
-at every retention tier").
+Why it exists: a refresh that rewrites a day in place (directory
+overwrite) is correct only for a single writer and latest-only readers.
+The north rule's Iceberg deployment gives two more guarantees: a reader
+concurrent with a refresh must see a consistent table version (snapshot
+isolation), and yesterday's rolled-up points must stay queryable after
+today's re-aggregation (time travel — the audit path for "rolled-up
+points match the reference bit-for-bit at every retention tier").
 
 Mechanism (exactly Iceberg's, minus the catalog service):
 
@@ -31,10 +30,15 @@ Mechanism (exactly Iceberg's, minus the catalog service):
   that simply omits expired days — Iceberg's ``DELETE WHERE`` on a
   partition predicate: O(partitions) manifest edit, zero data I/O, and
   the dropped days remain time-travel-readable from older snapshots.
+  It keeps its parent's lineage keys (`_LINEAGE_KEYS`), so a later
+  incremental refresh or stream replay reads the same provenance it
+  would have read before the retention commit.
 * **`expire_snapshots`** deletes manifests older than the kept window
   and then removes data files no surviving manifest references (orphan
   cleanup).  Only here is data physically deleted.
 
+Every commit publishes through `_publish`, the one place a manifest
+is written (``.tmp`` + atomic ``os.rename``, the commit point).
 Per-partition lineage + metrics ride in the manifest: each day entry
 records its files, row count (parquet footer metadata via pyarrow — no
 data scan) and bytes, so a resumed job can diff manifests to find what
@@ -56,7 +60,13 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .tiers import P_DAY_FMT
+P_DAY_FMT = "yyyy-MM-dd"
+
+# Manifest keys that record where a table version came from: the
+# finer-tier snapshot a cascade refresh read (sinks/refresh.py) and the
+# last micro-batch a stream committed (stream_to_snapshots).  A
+# metadata-only commit changes no data, so it keeps them.
+_LINEAGE_KEYS = ("source_snapshot", "stream_batch_id")
 
 
 def _snap_dir(base: str, tier: str) -> str:
@@ -98,6 +108,32 @@ def _partition_entry(pdir: str, files: List[str]) -> dict:
     return {"files": sorted(files), "rows": rows, "bytes": nbytes}
 
 
+def _publish(base: str, tier: str, sid: int, parent: Optional[int],
+             operation: str, partitions: Dict[str, dict],
+             extra: Optional[dict] = None) -> int:
+    """Write snapshot ``sid``'s manifest and publish it atomically: the
+    ``.tmp`` write is invisible to `snapshot_ids`, the rename is the
+    commit point."""
+    manifest = {
+        "snapshot_id": sid,
+        "parent_id": parent,
+        "committed_at": time.time(),
+        "operation": operation,
+        "partitions": partitions,
+        "summary": {"days": len(partitions),
+                    "rows": sum(p["rows"] for p in partitions.values()),
+                    "bytes": sum(p["bytes"] for p in partitions.values())},
+    }
+    if extra:
+        manifest.update(extra)
+    os.makedirs(_snap_dir(base, tier), exist_ok=True)
+    tmp = _manifest_path(base, tier, sid) + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(manifest, f, indent=1, sort_keys=True)
+    os.rename(tmp, _manifest_path(base, tier, sid))
+    return sid
+
+
 def commit_tier(agg: DataFrame, base: str, tier: str,
                 extra: Optional[dict] = None,
                 mode: str = "overwrite") -> int:
@@ -109,16 +145,14 @@ def commit_tier(agg: DataFrame, base: str, tier: str,
     partition costs one dict entry, not a rewrite).
     ``mode="append"`` (streaming micro-batch): the new files JOIN the
     parent's files for their day, so previously committed rows of the
-    same day survive — the snapshot equivalent of
-    `tiers.write_tier(mode="append")`, but transactional: a reader
-    never sees a half-appended batch, and the manifest's ``extra``
-    payload (e.g. the micro-batch id) becomes visible atomically with
-    the data, which is what makes exactly-once `foreachBatch` possible
+    same day survive.  The commit is transactional: a reader never sees
+    a half-appended batch, and the manifest's ``extra`` payload (e.g.
+    the micro-batch id) becomes visible atomically with the data, which
+    is what makes exactly-once `foreachBatch` possible
     (streaming/rollup_stream.py::stream_to_snapshots).
 
-    The staged write keeps `write_tier`'s physical sort
-    (series_id, bucket_ts) so parquet min/max stats still support
-    series_id pushdown within a day."""
+    The staged write sorts each day by (series_id, bucket_ts) so
+    parquet min/max stats support series_id pushdown within a day."""
     if mode not in ("overwrite", "append"):
         raise ValueError(f"unknown commit mode {mode!r}")
     ids = snapshot_ids(base, tier)
@@ -150,49 +184,21 @@ def commit_tier(agg: DataFrame, base: str, tier: str,
     shutil.rmtree(staging, ignore_errors=True)
     shutil.rmtree(os.path.join(base, "_staging", tier), ignore_errors=True)
 
-    manifest = {
-        "snapshot_id": sid,
-        "parent_id": parent,
-        "committed_at": time.time(),
-        "operation": mode,
-        "partitions": partitions,
-        "summary": {"days": len(partitions),
-                    "rows": sum(p["rows"] for p in partitions.values()),
-                    "bytes": sum(p["bytes"] for p in partitions.values())},
-    }
-    if extra:
-        manifest.update(extra)
-    os.makedirs(_snap_dir(base, tier), exist_ok=True)
-    tmp = _manifest_path(base, tier, sid) + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(manifest, f, indent=1, sort_keys=True)
-    os.rename(tmp, _manifest_path(base, tier, sid))  # atomic publish
-    return sid
+    return _publish(base, tier, sid, parent, mode, partitions, extra)
 
 
 def commit_retention(base: str, tier: str, keep_since: str) -> int:
     """Retention as a metadata commit (Iceberg ``DELETE WHERE p_day <
     keep_since``): publish a snapshot whose manifest omits the expired
     days.  O(expired partitions) dict edits, zero data I/O; the days
-    stay readable from older snapshots until `expire_snapshots`."""
+    stay readable from older snapshots until `expire_snapshots`.  The
+    parent's `_LINEAGE_KEYS` are kept; ``refreshed_days`` describes the
+    parent's own commit and is not."""
     parent = load_manifest(base, tier)
-    sid = parent["snapshot_id"] + 1
+    pid = parent["snapshot_id"]
     kept = {d: e for d, e in parent["partitions"].items() if d >= keep_since}
-    manifest = {
-        "snapshot_id": sid,
-        "parent_id": parent["snapshot_id"],
-        "committed_at": time.time(),
-        "operation": "delete",
-        "partitions": kept,
-        "summary": {"days": len(kept),
-                    "rows": sum(p["rows"] for p in kept.values()),
-                    "bytes": sum(p["bytes"] for p in kept.values())},
-    }
-    tmp = _manifest_path(base, tier, sid) + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(manifest, f, indent=1, sort_keys=True)
-    os.rename(tmp, _manifest_path(base, tier, sid))
-    return sid
+    lineage = {k: parent[k] for k in _LINEAGE_KEYS if k in parent}
+    return _publish(base, tier, pid + 1, pid, "delete", kept, lineage)
 
 
 def read_tier(spark: SparkSession, base: str, tier: str,

@@ -61,44 +61,6 @@ def run_file_stream(spark: SparkSession, input_dir: str, schema: str,
     return q
 
 
-def stream_to_tiers(spark: SparkSession, input_dir: str, schema: str,
-                    base: str, checkpoint_dir: str, tier: str = "1m",
-                    series_expr: str = "concat('user', user_id) ",
-                    ts_col: str = "ts", value_col: str = "value",
-                    watermark: str = "10 minutes"):
-    """File-source → 1m streaming rollup → the TIERED sink
-    (sinks/tiers.py layout) via ``foreachBatch``: each micro-batch of
-    finalized windows is APPENDED into its (tier, p_day) partitions, so
-    the streaming tier lands in the same table layout the batch cascade
-    and retention/compaction operate on.
-
-    Delivery is at-least-once into the partitions (a micro-batch
-    retried after a sink failure can append twice — the Structured
-    Streaming contract for non-transactional ``foreachBatch`` sinks);
-    the periodic batch refresh (``write_tier(agg, base, tier)`` with
-    dynamic overwrite, recomputing recent days) is the corrector that
-    restores exactness — the streaming-ingest / batch-repair split this
-    module's header describes, now sharing one physical table."""
-    from ..sinks.tiers import write_tier
-
-    src = (spark.readStream.schema(schema).parquet(input_dir)
-           .withColumn("series_id", F.expr(series_expr)))
-    agg = stream_rollup_1m(src, ts_col=ts_col, value_col=value_col,
-                           watermark=watermark)
-
-    def sink_batch(bdf: DataFrame, batch_id: int) -> None:
-        write_tier(bdf, base, tier, mode="append")
-
-    q = (agg.writeStream
-         .foreachBatch(sink_batch)
-         .option("checkpointLocation", checkpoint_dir)
-         .outputMode("append")
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
-    return q
-
-
 def stream_to_snapshots(spark: SparkSession, input_dir: str, schema: str,
                         base: str, checkpoint_dir: str, tier: str = "1m",
                         series_expr: str = "concat('user', user_id) ",
@@ -108,17 +70,17 @@ def stream_to_snapshots(spark: SparkSession, input_dir: str, schema: str,
     (sinks/snapshots.py) with **exactly-once** micro-batch delivery.
 
     `foreachBatch` is at-least-once: after a sink failure Spark replays
-    the micro-batch with the SAME ``batch_id``.  `stream_to_tiers`
-    therefore tolerates duplicate appends and relies on the batch
-    refresh to repair; here the sink itself is idempotent — the
-    canonical Structured Streaming pattern for transactional sinks:
+    the micro-batch with the SAME ``batch_id``.  The sink itself is
+    therefore idempotent — the canonical Structured Streaming pattern
+    for transactional sinks:
 
     * each micro-batch commits with ``mode="append"`` (new files join
       the day's existing files; previously committed windows survive);
     * the manifest records ``stream_batch_id`` atomically with the
       data (the JSON rename IS the commit point);
     * a replayed batch is detected by ``batch_id <= stream_batch_id``
-      in the latest manifest and skipped before any write.
+      in the latest manifest and skipped before any write (retention
+      commits keep ``stream_batch_id``, so this holds across them).
 
     A crash BETWEEN the data move and the manifest rename leaves
     orphaned ``part-v<N>`` files that no manifest references — invisible

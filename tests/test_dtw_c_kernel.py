@@ -90,3 +90,24 @@ def test_c_disabled_env(monkeypatch):
     assert _dtwc.lib() is None
     # reset the loader state for other tests
     monkeypatch.setattr(_dtwc, "_tried", False)
+
+
+@pytest.mark.parametrize("loose", ["file", "dir"])
+def test_refuses_untrusted_library(monkeypatch, tmp_path, loose):
+    """A library at the build path that someone else could have written
+    (group/world-writable file or directory) must never reach dlopen;
+    the loader falls back to numpy instead."""
+    import os
+
+    planted = tmp_path / f"_dtw_kernel_{_dtwc._tag()}.so"
+    planted.write_bytes(b"not a shared object")
+    os.chmod(planted, 0o777 if loose == "file" else 0o700)
+    os.chmod(tmp_path, 0o777 if loose == "dir" else 0o700)
+    opened = []
+    monkeypatch.setattr(_dtwc, "_build_dir", lambda: str(tmp_path))
+    monkeypatch.setattr(_dtwc.ctypes, "CDLL",
+                        lambda path, *a, **k: opened.append(path))
+    monkeypatch.setattr(_dtwc, "_lib", None)
+    monkeypatch.setattr(_dtwc, "_tried", False)
+    assert _dtwc.lib() is None
+    assert opened == []

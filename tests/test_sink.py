@@ -1,6 +1,8 @@
-"""Tiered parquet sink (sinks/tiers.py): roundtrip fidelity, dynamic
-partition overwrite idempotency, O(partitions) retention, partition
-pruning in the physical plan, and single-partition compaction."""
+"""The snapshot tier table (sinks/snapshots.py) and its incremental
+refresh (sinks/refresh.py): roundtrip fidelity, copy-on-write refresh
+with time travel and reader isolation, manifest-pruned reads,
+retention as a metadata commit that keeps lineage, expiry with orphan
+cleanup, and exactly-once streaming appends."""
 
 import os
 import shutil
@@ -12,7 +14,6 @@ from dtaidistance_spark.operators import rollup as R
 from dtaidistance_spark.operators.ingest import transcript_points
 from dtaidistance_spark.sinks import refresh as RF
 from dtaidistance_spark.sinks import snapshots as SN
-from dtaidistance_spark.sinks import tiers as SK
 from dtaidistance_spark.sources.transcripts import synth_transcripts
 
 BASE = "/tmp/tier_sink_test"
@@ -38,113 +39,6 @@ def base():
 def _canon(df):
     return sorted(tuple(str(v) for v in r)
                   for r in df.select(*sorted(df.columns)).collect())
-
-
-class TestTierSink:
-    def test_roundtrip(self, spark, agg1h, base):
-        SK.write_tier(agg1h, base, "1h")
-        back = SK.read_tier(spark, base, "1h")
-        assert _canon(back) == _canon(agg1h)
-
-    def test_dynamic_overwrite_idempotent(self, spark, agg1h, base):
-        """Writing the same batch twice must not duplicate or drop
-        rows — the continuous-aggregate refresh pattern (recompute a
-        window, overwrite only its days)."""
-        SK.write_tier(agg1h, base, "1h")
-        first = _canon(SK.read_tier(spark, base, "1h"))
-        # rewrite only the latest day: other partitions stay untouched
-        last_day = max(SK.list_partitions(base, "1h"))
-        recent = agg1h.where(
-            F.date_format("bucket_ts", SK.P_DAY_FMT) == last_day)
-        SK.write_tier(recent, base, "1h")
-        assert _canon(SK.read_tier(spark, base, "1h")) == first
-
-    def test_two_tiers_coexist(self, spark, agg1h, base):
-        agg1d = R.rollup_cascade(agg1h, "1d")
-        SK.write_tier(agg1h, base, "1h")
-        SK.write_tier(agg1d, base, "1d")
-        assert _canon(SK.read_tier(spark, base, "1d")) == _canon(agg1d)
-        assert _canon(SK.read_tier(spark, base, "1h")) == _canon(agg1h)
-
-    def test_retention_drops_partitions_only(self, spark, agg1h, base):
-        SK.write_tier(agg1h, base, "1h")
-        days = SK.list_partitions(base, "1h")
-        assert len(days) >= 3
-        cutoff = days[len(days) // 2]
-        dropped = SK.drop_expired(base, "1h", cutoff)
-        assert dropped == [d for d in days if d < cutoff]
-        assert SK.list_partitions(base, "1h") == \
-            [d for d in days if d >= cutoff]
-        # surviving rows equal a declarative retention filter on the agg
-        kept = SK.read_tier(spark, base, "1h")
-        expected = agg1h.where(
-            F.date_format("bucket_ts", SK.P_DAY_FMT) >= cutoff)
-        assert _canon(kept) == _canon(expected)
-
-    def test_read_prunes_partitions(self, spark, agg1h, base):
-        """The tier + day-range predicates must reach the scan as
-        PartitionFilters — a 1d read over a 100 TB 1m tier must not
-        list the 1m files."""
-        SK.write_tier(agg1h, base, "1h")
-        agg1d = R.rollup_cascade(agg1h, "1d")
-        SK.write_tier(agg1d, base, "1d")
-        days = SK.list_partitions(base, "1h")
-        df = SK.read_tier(spark, base, "1h", since=days[-1])
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "PartitionFilters" in plan
-        assert "tier" in plan.split("PartitionFilters")[1][:200]
-        # row-level check: only the last day's rows come back
-        got = df.select(F.date_format("bucket_ts", SK.P_DAY_FMT)
-                        .alias("d")).distinct().collect()
-        assert {r["d"] for r in got} == {days[-1]}
-
-    def test_stream_to_tiers(self, spark, agg1h, base, tmp_path):
-        """Streaming 1m tier lands in the tiered layout (append per
-        micro-batch) and equals the batch 1m rollup on the emitted
-        (watermark-closed) windows; the batch refresh then overwrites
-        the same partitions losslessly — the repair path."""
-        from dtaidistance_spark.sources.transcripts import synth_transcripts
-        from dtaidistance_spark.operators.ingest import transcript_points
-        from dtaidistance_spark.streaming.rollup_stream import stream_to_tiers
-
-        tr = synth_transcripts(spark, n_convs=10, seed=3, max_turns=60)
-        pts = transcript_points(tr, kinds=("turn_rate",))
-        src_dir = str(tmp_path / "src")
-        pts.select("series_id", "ts", "value").write.parquet(src_dir)
-        stream_to_tiers(
-            spark, src_dir,
-            schema="series_id string, ts timestamp, value double",
-            base=base, checkpoint_dir=str(tmp_path / "ck"),
-            series_expr="series_id")
-        got = SK.read_tier(spark, base, "1m") \
-            .orderBy("series_id", "bucket_ts").toPandas()
-        batch = R.rollup_points(pts, "1m") \
-            .select("series_id", "bucket_ts", "cnt", "sum", "min", "max") \
-            .orderBy("series_id", "bucket_ts").toPandas()
-        merged = got.merge(batch, on=["series_id", "bucket_ts"],
-                           suffixes=("_s", "_b"))
-        assert len(merged) == len(got) > 0
-        assert (merged["cnt_s"].values == merged["cnt_b"].values).all()
-        # batch repair: dynamic-overwrite the same tier from the full
-        # batch rollup; the table then equals the batch tier exactly
-        full = R.rollup_points(pts, "1m") \
-            .select("series_id", "bucket_ts", "cnt", "sum", "min", "max")
-        SK.write_tier(full, base, "1m")
-        assert _canon(SK.read_tier(spark, base, "1m")) == _canon(full)
-
-    def test_compact_tier(self, spark, agg1h, base):
-        SK.write_tier(agg1h.repartition(8), base, "1h")
-        day = SK.list_partitions(base, "1h")[0]
-        pdir = os.path.join(base, "tier=1h", f"p_day={day}")
-        before = _canon(SK.read_tier(spark, base, "1h"))
-        n_before = len([f for f in os.listdir(pdir)
-                        if f.endswith(".parquet")])
-        assert n_before > 1
-        SK.compact_tier(spark, base, "1h", day, target_files=1)
-        n_after = len([f for f in os.listdir(pdir)
-                       if f.endswith(".parquet")])
-        assert n_after == 1
-        assert _canon(SK.read_tier(spark, base, "1h")) == before
 
 
 class TestSnapshotSink:
@@ -293,6 +187,27 @@ class TestIncrementalRefresh:
         assert RF.refresh_cascade(spark, base, "1m", "1h") is None
         assert SN.snapshot_ids(base, "1h") == [1]
 
+    def test_retention_keeps_refresh_lineage(self, spark, agg1m, base):
+        """A retention commit on both tiers keeps the 1h tier's
+        ``source_snapshot``, so the next refresh recomputes only the
+        day that changed, not every retained day."""
+        SN.commit_tier(agg1m, base, "1m")
+        RF.refresh_cascade(spark, base, "1m", "1h")
+        days = sorted(SN.load_manifest(base, "1m")["partitions"])
+        assert len(days) >= 3
+        for t in ("1m", "1h"):
+            sid = SN.commit_retention(base, t, days[1])
+        man = SN.load_manifest(base, "1h", sid)
+        assert man["source_snapshot"] == 1
+        assert "refreshed_days" not in man
+        day = days[-1]
+        SN.commit_tier(self._bump_day(agg1m, day), base, "1m")
+        sid = RF.refresh_cascade(spark, base, "1m", "1h")
+        assert SN.load_manifest(base, "1h", sid)["refreshed_days"] == [day]
+        src_now = SN.read_tier(spark, base, "1m")
+        assert _canon(SN.read_tier(spark, base, "1h")) \
+            == _canon(R.rollup_cascade(src_now, "1h"))
+
     def test_second_cascade_level(self, spark, agg1m, base):
         SN.commit_tier(agg1m, base, "1m")
         RF.refresh_cascade(spark, base, "1m", "1h")
@@ -348,6 +263,11 @@ class TestSnapshotStreaming:
                            suffixes=("_s", "_b"))
         assert len(merged) == len(got) > 0
         assert (merged["cnt_s"].values == merged["cnt_b"].values).all()
+        # a retention commit that drops nothing must keep the
+        # exactly-once marker ``stream_batch_id``
+        earliest = min(SN.load_manifest(base, "1m")["partitions"])
+        SN.commit_retention(base, "1m", earliest)
+        ids = SN.snapshot_ids(base, "1m")
         # replay the whole stream from a FRESH checkpoint (batch ids
         # restart at 0): every batch is detected as already committed,
         # so no snapshot advances and the table is unchanged

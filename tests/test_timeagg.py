@@ -343,6 +343,35 @@ class TestCandlestick:
         assert "SinglePartition" not in plan, plan
         assert "Window" not in plan, plan  # pure hash-agg, no exchange
 
+    def test_packed_key_domain_edges_kept(self, spark):
+        """ts = epoch and order 0 / 10^18 - 1 are inside the packed
+        key's domain and still order exactly."""
+        from dtaidistance_spark.functions.timeagg import candlestick
+        epoch = dt.datetime(1970, 1, 1)
+        df = spark.createDataFrame(
+            [("a", epoch, 10 ** 18 - 1, 5.0), ("a", epoch, 0, 3.0)],
+            "series_id string, ts timestamp, event_id long, value double")
+        r = candlestick(df, "1h", order_cols=("event_id",),
+                        pack_key=True).collect()[0]
+        assert (r.n, r.open, r.close) == (2, 3.0, 5.0)
+
+    @pytest.mark.parametrize("ts, order", [
+        (dt.datetime(1960, 1, 1), 1),    # pre-epoch: would be a NULL key
+        (T0, 10 ** 18),                  # 19 digits: lpad would truncate
+        (T0, -1),
+    ])
+    def test_packed_key_out_of_domain_raises(self, spark, ts, order):
+        from dtaidistance_spark.functions.timeagg import (candlestick,
+                                                          packed_order_key)
+        df = spark.createDataFrame(
+            [("a", T0, 0, 1.0), ("a", ts, order, 2.0)],
+            "series_id string, ts timestamp, event_id long, value double")
+        with pytest.raises(Exception, match="packed_order_key"):
+            df.select(packed_order_key("ts", "event_id")).collect()
+        with pytest.raises(Exception, match="packed_order_key"):
+            candlestick(df, "1h", order_cols=("event_id",),
+                        pack_key=True).collect()
+
 
 class TestStateTransitions:
     def test_hand_fixture_counts_and_probs(self, spark):
